@@ -414,50 +414,40 @@ ORACLES: dict[str, str] = {
 # iteration) and the local twin-runner (scripts/oracle_check.py) always
 # cover the full set.
 _CERT_FIRST = [
-    # r15 OPTIMIZATION rotation (VERDICT r14 #1 centerpiece): the round
-    # touches operators/text.py (kgram_hashes HOF-CSE — the O(len^2)
-    # re-lowering fix) plus the tokenizer/LM family whose dependents are
-    # a subset of text.py's (unigram, bpe, wordpiece, lm, langid, ccnet,
-    # dsir, sketches, streaming/sketches, curation/chunking/decontam/
-    # spandedup/bm25/featurehash/tfidf/cooc as profiled) — every guarded
-    # gate whose engine deps include a touched module rotates in. The 46
-    # text.py dependents fill the window only after the five provably
-    # text-free packing/mixture gates' DEPS were narrowed (committed
-    # separately, with a source-closure guard test); results are
-    # oracle-verified unchanged, only plans and driver coordination
-    # shrink.
-    "x01_dedup_summary", "x02_ngram_jaccard", "x03_minhash_neardup",
-    "x04_simhash_neardup", "x07_text_metrics", "x08_langid_distribution",
-    "x100_wordpiece_encode", "x104_kn_logprob", "x108_langid_confusion",
-    "x112_langid_ccnet", "x14_ngram_jaccard_capped",
-    "x16_quality_deciles", "x20_pii_redaction", "x21_repetition_deciles",
-    "x22_vocab_top", "x27_winnow_fingerprints", "x28_curation_funnel",
-    "x29_sequence_packing", "x35_duplicate_groups", "x40_decontaminate",
-    "x44_cms_estimates", "x45_tfidf_top_terms", "x47_chunk_documents",
-    "x49_incremental_dedup", "x50_streaming_cms",
-    "x52_pretraining_pipeline", "x54_unigram_logprob", "x55_bpe_train",
-    "x56_domain_stats", "x58_bigram_logprob", "x61_bpe_encode",
-    "x62_quality_rules", "x68_canonical_docs", "x73_dsir_weights",
-    "x74_span_dedup", "x76_ccnet_buckets", "x77_logreg_quality",
-    "x78_curation_chain", "x79_bm25_topk", "x81_pmi_cooccurrence",
-    "x82_hashed_features", "x88_unigram_tokenizer", "x90_unigram_encode",
-    "x92_stream_dedup_commit", "x93_incremental_near_dup",
+    # Query-stack rotation: query.py (aggregate_envelope answered by one
+    # plan and one collect, no persist) and server.py (request validation,
+    # one CSV writer) changed, so every gate whose engine deps include them
+    # rotates in — e18 and q01-q17.
+    "e18_partition_prune", "q01_facts_page", "q02_cut_point",
+    "q03_cut_range", "q04_cut_set", "q05_cut_negate",
+    "q06_aggregate_summary", "q07_drilldown", "q08_multi_drilldown",
+    "q09_order_topk", "q10_pagination_cells", "q11_envelope_rollup",
+    "q12_point_lookup", "q13_fact_by_id", "q14_members",
+    "q15_total_percentage", "q16_cell_http", "q17_model_http",
+    # r15 rotation gates whose committed hashes drifted after the r15
+    # certification (their modules changed since): they stay in the window
+    # until a fresh cert re-stamps them.
+    "x100_wordpiece_encode", "x104_kn_logprob", "x112_langid_ccnet",
+    "x54_unigram_logprob", "x58_bigram_logprob", "x73_dsir_weights",
+    "x76_ccnet_buckets", "x78_curation_chain", "x81_pmi_cooccurrence",
+    "x88_unigram_tokenizer", "x90_unigram_encode", "x91_ivf_pq_ann",
+    "x94_pq_index_upsert", "x95_stream_vector_index",
     "x99_wordpiece_train",
-    # + operators/pq.py (ADVICE r14: try/finally around the overlapped
-    # codes/vectors commits so both cached frames unpersist on any exit)
-    "x91_ivf_pq_ann", "x94_pq_index_upsert", "x95_stream_vector_index",
 ]
 _CERT_PENDING: list[str] = []
 # Freshness re-certification (VERDICT r10 #2 / r12 #1 / r13 #1): the
-# window's free slot(s) re-run the OLDEST standing certs. The r15 text
-# rotation leaves one free slot; the entries below soak it up (and the
-# rest spill past the window, where the manifest guard still covers them
-# byte-for-byte).
+# window's free slot(s) re-run the OLDEST standing certs. The entries below
+# soak them up (and any excess spills past the window, where the manifest
+# guard still covers them byte-for-byte). Six r11 certs (x30, x32-x34,
+# x38, x39) joined so that the 33 _CERT_FIRST gates plus the refresh
+# entries fill all 50 slots.
 _CERT_REFRESH = [
     "x10_sliding_windows", "x11_session_stats", "x12_props_json",
     "x13_salted_drilldown", "x15_media_metadata", "x17_ivf_ann",
     "x19_image_dims", "x23_wav_metadata", "x24_audio_headers",
-    "x51_orc_roundtrip", "x37_asof_join",
+    "x51_orc_roundtrip", "x37_asof_join", "x30_hash_split",
+    "x32_image_decode", "x33_stateful_sessions", "x34_wav_decode",
+    "x38_interval_join", "x39_stratified_sample",
 ]
 _CERT_TAIL = [
     # previously hash-certified; implementing modules untouched since the
@@ -465,40 +455,44 @@ _CERT_TAIL = [
     # tests/cert_manifest.json, and by scripts/cert_manifest.py itself,
     # which refuses to re-stamp a guarded gate whose code or engine deps
     # drifted — including a drifted or partially-uncommitted deps LIST).
-    # The r14-optimized txn/dedup/CDF bands (e17, x96-x98, x101-x103,
-    # x105-x107, x109-x111, x113/x114, x06/x18/x53/x59/x80/x85/x87) hold
-    # their fresh r14 certs — r15 touches none of their modules.
+    # The r15 text-family gates that CORRECTNESS_r15.json certified and
+    # whose hashes still match the committed manifest hold that cert here.
     "e01_enrich_ror", "e02_publication_key", "e03_deal_halving",
     "e04_union_combined", "e05_coverage_zerofill", "e06_prune_semi",
     "e07_priority_rank", "e08_melt_explode", "e09_journal_id",
     "e10_colon_scrub", "e11_doi_lookup", "e12_institution_report",
     "e13_ac_institutions", "e14_annual_pubdates", "e15_hybrid_catalog",
-    "e16_springer_coverage", "e17_cache_upsert", "e18_partition_prune",
-    "e19_manifest_roundtrip", "e20_json_cache", "q01_facts_page",
-    "q02_cut_point", "q03_cut_range", "q04_cut_set", "q05_cut_negate",
-    "q06_aggregate_summary", "q07_drilldown", "q08_multi_drilldown",
-    "q09_order_topk", "q10_pagination_cells", "q11_envelope_rollup",
-    "q12_point_lookup", "q13_fact_by_id", "q14_members",
-    "q15_total_percentage", "q16_cell_http", "q17_model_http",
-    "x05_ann_topk", "x06_lsh_neardup_embeddings", "x09_tumbling_daily",
-    "x101_txn_zorder", "x102_txn_stream_changes", "x103_txn_merge",
-    "x105_txn_evolve_changes", "x106_txn_rebucket",
-    "x107_stream_keyed_cdf", "x109_keyed_cdf_managed", "x110_cdf_replica",
-    "x111_incremental_agg", "x113_filtered_replica", "x114_filtered_agg",
-    "x18_lsh_neardup_capped", "x25_streaming_tumbling",
-    "x26_streaming_dedup", "x30_hash_split", "x31_profile",
-    "x32_image_decode", "x33_stateful_sessions", "x34_wav_decode",
-    "x36_ivf_index", "x38_interval_join", "x39_stratified_sample",
+    "e16_springer_coverage", "e17_cache_upsert", "e19_manifest_roundtrip",
+    "e20_json_cache", "x01_dedup_summary", "x02_ngram_jaccard",
+    "x03_minhash_neardup", "x04_simhash_neardup", "x05_ann_topk",
+    "x06_lsh_neardup_embeddings", "x07_text_metrics",
+    "x08_langid_distribution", "x09_tumbling_daily", "x101_txn_zorder",
+    "x102_txn_stream_changes", "x103_txn_merge", "x105_txn_evolve_changes",
+    "x106_txn_rebucket", "x107_stream_keyed_cdf", "x108_langid_confusion",
+    "x109_keyed_cdf_managed", "x110_cdf_replica", "x111_incremental_agg",
+    "x113_filtered_replica", "x114_filtered_agg",
+    "x14_ngram_jaccard_capped", "x16_quality_deciles",
+    "x18_lsh_neardup_capped", "x20_pii_redaction",
+    "x21_repetition_deciles", "x22_vocab_top", "x25_streaming_tumbling",
+    "x26_streaming_dedup", "x27_winnow_fingerprints",
+    "x28_curation_funnel", "x29_sequence_packing", "x31_profile",
+    "x35_duplicate_groups", "x36_ivf_index", "x40_decontaminate",
     "x41_bloom_semi_join", "x42_topk_per_group",
-    "x43_deterministic_shuffle", "x46_quantize_embeddings",
-    "x48_rebalance_mixture", "x53_semantic_dedup",
-    "x57_temperature_resample", "x59_cluster_outliers",
-    "x60_stream_stream_join", "x63_event_funnel", "x64_cohort_retention",
-    "x65_url_dedup", "x66_line_dedup", "x67_char_entropy",
+    "x43_deterministic_shuffle", "x44_cms_estimates",
+    "x45_tfidf_top_terms", "x46_quantize_embeddings",
+    "x47_chunk_documents", "x48_rebalance_mixture",
+    "x49_incremental_dedup", "x50_streaming_cms",
+    "x52_pretraining_pipeline", "x53_semantic_dedup", "x55_bpe_train",
+    "x56_domain_stats", "x57_temperature_resample", "x59_cluster_outliers",
+    "x60_stream_stream_join", "x61_bpe_encode", "x62_quality_rules",
+    "x63_event_funnel", "x64_cohort_retention", "x65_url_dedup",
+    "x66_line_dedup", "x67_char_entropy", "x68_canonical_docs",
     "x69_percentile_filter", "x70_rolling_features", "x71_size_sharding",
-    "x72_kmeans_fit", "x75_sample_per_group", "x80_pagerank",
-    "x83_zorder_layout", "x84_pca_projection", "x85_fuzzy_linkage",
-    "x86_weighted_sample", "x87_knn_graph", "x89_pca_block",
+    "x72_kmeans_fit", "x74_span_dedup", "x75_sample_per_group",
+    "x77_logreg_quality", "x79_bm25_topk", "x80_pagerank",
+    "x82_hashed_features", "x83_zorder_layout", "x84_pca_projection",
+    "x85_fuzzy_linkage", "x86_weighted_sample", "x87_knn_graph",
+    "x89_pca_block", "x92_stream_dedup_commit", "x93_incremental_near_dup",
     "x96_txn_delete", "x97_txn_skipping", "x98_txn_changes",
 ]
 

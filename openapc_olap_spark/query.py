@@ -12,15 +12,16 @@ to declarative DataFrame plans:
 
 Everything is built-in Column expressions, so Catalyst gets the whole plan:
 cuts push down to the Parquet scan, aggregates are partial+final hash aggs,
-and the summary+cells envelope is ONE grouping-sets pass (no second scan) —
-the properties that keep these queries cheap at 100 TB.
+and the summary+cells envelope is ONE grouping-sets pass answered by ONE
+Spark action (no second scan, no persist) — the properties that keep these
+queries cheap at 100 TB.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from openapc_olap_spark.cuts import Cut, cuts_to_predicate, parse_cuts
@@ -99,27 +100,27 @@ class QueryEngine:
         return df.filter(pred) if pred is not None else df
 
     @staticmethod
-    def _apply_order(df: DataFrame, order: tuple[OrderTerm, ...],
-                     tiebreak: list[str] | None = None) -> DataFrame:
-        cols: list[Column] = [
-            F.col(t.field).asc() if t.ascending else F.col(t.field).desc()
-            for t in order
-        ]
-        ordered_names = {t.field for t in order}
-        for tb in tiebreak or []:
-            if tb not in ordered_names:
-                cols.append(F.col(tb).asc())
-        return df.orderBy(*cols) if cols else df
+    def _order_cols(order: tuple[OrderTerm, ...],
+                    tiebreak: list[str]) -> list[Column]:
+        """The order terms, then the tie-break columns they leave out."""
+        named = {t.field for t in order}
+        return ([F.col(t.field).asc() if t.ascending else F.col(t.field).desc()
+                 for t in order]
+                + [F.col(tb).asc() for tb in tiebreak if tb not in named])
 
     @staticmethod
-    def _paginate(df: DataFrame, page: int | None, pagesize: int | None) -> DataFrame:
-        """0-based page / pagesize, capped at JSON_RECORD_LIMIT; a request
-        without pagination silently truncates at the cap (HOWTO.md:15,39-43)."""
+    def _page_bounds(page: int | None,
+                     pagesize: int | None) -> tuple[int, int]:
+        """(offset, size) of a 0-based page, capped at JSON_RECORD_LIMIT; a
+        request without pagination silently truncates at the cap
+        (HOWTO.md:15,39-43)."""
         size = min(pagesize or JSON_RECORD_LIMIT, JSON_RECORD_LIMIT)
-        offset = (page or 0) * size
-        if offset:
-            df = df.offset(offset)
-        return df.limit(size)
+        return (page or 0) * size, size
+
+    def _paginate(self, df: DataFrame, page: int | None,
+                  pagesize: int | None) -> DataFrame:
+        offset, size = self._page_bounds(page, pagesize)
+        return (df.offset(offset) if offset else df).limit(size)
 
     # -- the four query classes ----------------------------------------------
 
@@ -129,7 +130,8 @@ class QueryEngine:
         cube = self.registry.get(spec.cube)
         df = self._apply_cuts(self._cell(cube), spec)
         tiebreak = [cube.fact_id] if cube.fact_id else []
-        df = self._apply_order(df, spec.order, tiebreak)
+        cols = self._order_cols(spec.order, tiebreak)
+        df = df.orderBy(*cols) if cols else df
         return self._paginate(df, spec.page, spec.pagesize)
 
     def fact(self, cube_name: str, fact_id_value) -> DataFrame:
@@ -161,29 +163,22 @@ class QueryEngine:
         aggs = [a.to_column() for a in cube.aggregates]
         if not aggs:
             raise ValueError(f"cube {spec.cube!r} declares no aggregates")
-        if spec.drilldown:
-            out = df.groupBy(*[F.col(d) for d in spec.drilldown]).agg(*aggs)
-        else:
-            out = df.agg(*aggs)
-        out = self._apply_order(out, spec.order, list(spec.drilldown))
+        out = df.groupBy(*spec.drilldown).agg(*aggs)
+        cols = self._order_cols(spec.order, list(spec.drilldown))
+        out = out.orderBy(*cols) if cols else out
         return self._paginate(out, spec.page, spec.pagesize)
 
-    def aggregate_envelope(self, spec: QuerySpec,
-                           approx_total: bool = False) -> dict:
+    def aggregate_envelope(self, spec: QuerySpec) -> dict:
         """``/cube/<c>/aggregate`` response: ``{summary, cells,
-        total_cell_count}`` (Q11).
+        total_cell_count}`` (Q11), from ONE plan and ONE collect.
 
-        Computed in ONE grouping-sets pass — `(drilldown...), ()` — so the
-        100 TB fact scan happens once; ``grouping_id`` separates the grand-
-        total row (summary) from the per-group rows (cells). Falls back to a
-        plain two-aggregate plan when there is no drilldown.
-
-        ``total_cell_count`` is an exact count of the (cached) cells frame
-        by default — one extra pass over cached group rows. For 100 TB
-        drilldowns with ~10^8 groups even that pass costs real time, so
-        ``approx_total=True`` rides an ``approx_count_distinct`` of the
-        drilldown tuple on the SAME grouping-sets aggregation (read off
-        the grand-total row, HLL++ default ~2% rsd) — zero extra jobs.
+        A grouping-sets pass — ``(drilldown...), ()`` — scans the cut cell
+        once; ``grouping_id`` separates the grand-total row (summary) from
+        the per-group rows (cells). Two windows over the aggregated rows
+        (not the facts) put the exact cell count on every row and rank the
+        cells in request order, so one collect of "summary or in-page" rows
+        answers the request, and a page past the end keeps its exact total.
+        An empty cut aggregates no rows: ``summary == {}``.
         """
         cube = self.registry.get(spec.cube)
         if not spec.drilldown:
@@ -191,35 +186,34 @@ class QueryEngine:
             summary = summary_rows[0].asDict() if summary_rows else {}
             return {"summary": summary, "cells": [], "total_cell_count": 0}
 
-        df = self._apply_cuts(self._cell(cube), spec)
+        drilldown = list(spec.drilldown)
         aggs = [a.to_column() for a in cube.aggregates]
-        dims = [F.col(d) for d in spec.drilldown]
-        if approx_total:
-            aggs = aggs + [F.approx_count_distinct(F.struct(*dims))
-                           .alias("__acc__")]
-        both = (
-            df.groupingSets([dims, []], *dims)
+        is_cell = F.col("__gid__") == 0
+        n_cells = F.count_if(is_cell).over(Window.partitionBy())
+        rank = F.row_number().over(Window.partitionBy("__gid__").orderBy(
+            *self._order_cols(spec.order, drilldown)))
+        offset, size = self._page_bounds(spec.page, spec.pagesize)
+        in_page = F.col("__rn__").between(offset + 1, offset + size)
+        rows = (
+            self._apply_cuts(self._cell(cube), spec)
+            .groupingSets([drilldown, []], *drilldown)
             .agg(*aggs, F.grouping_id().alias("__gid__"))
+            # count first: its single-partition exchange also serves the
+            # per-grouping-id ranking, so the windows add one exchange
+            .withColumn("__n__", n_cells)
+            .withColumn("__rn__", rank)
+            .filter(~is_cell | in_page)
+            .collect()
         )
-        both = both.persist()
-        try:
-            summary_row = both.filter(F.col("__gid__") != 0).drop("__gid__") \
-                .drop(*spec.drilldown).collect()
-            cells_df = both.filter(F.col("__gid__") == 0).drop("__gid__")
-            if approx_total:
-                cells_df = cells_df.drop("__acc__")
-                total = (int(summary_row[0]["__acc__"])
-                         if summary_row else 0)
+        summary, cells, total = {}, [], 0
+        for row in sorted(rows, key=lambda r: r["__rn__"]):
+            out = row.asDict()
+            gid, n, _ = out.pop("__gid__"), out.pop("__n__"), out.pop("__rn__")
+            if gid:
+                summary = {k: v for k, v in out.items() if k not in drilldown}
+                total = n
             else:
-                total = cells_df.count()
-            cells_df = self._apply_order(cells_df, spec.order, list(spec.drilldown))
-            cells = [r.asDict() for r in
-                     self._paginate(cells_df, spec.page, spec.pagesize).collect()]
-        finally:
-            both.unpersist()
-        summary = summary_row[0].asDict() if summary_row else {}
-        if approx_total:
-            summary.pop("__acc__", None)
+                cells.append(out)
         return {"summary": summary, "cells": cells, "total_cell_count": total}
 
     def with_total_percentage(self, spec: QuerySpec, aggregate: str,

@@ -14,7 +14,9 @@ can host it) exposing the reference's API over the Spark-backed QueryEngine:
     GET /cube/<c>/cell              cut echo + summary
 
 Responses carry CORS (olap_server.py:4,8) and respect the hard 500-row cap
-(slicer.ini:6). The Spark driver is the web process; executors do the work —
+(slicer.ini:6). A request naming anything its cube does not declare, or a
+negative page, is a 400 JSON error before any plan is built. The Spark
+driver is the web process; executors do the work —
 the same topology as the reference's server→PostgreSQL split (SURVEY.md §3.1).
 """
 
@@ -23,31 +25,27 @@ from __future__ import annotations
 import csv
 import io
 import json
-from typing import Callable
 from urllib.parse import parse_qs
 
-from openapc_olap_spark.query import QueryEngine, QuerySpec
+from openapc_olap_spark.model import Cube
+from openapc_olap_spark.query import JSON_RECORD_LIMIT, QueryEngine, QuerySpec
 
-
-def _json_default(o):
-    return str(o)
+INFO = {"api_version": 2, "authentication": "none",
+        "json_record_limit": JSON_RECORD_LIMIT}
 
 
 class HttpError(Exception):
     def __init__(self, status: str, message: str):
         super().__init__(message)
         self.status = status
-        self.message = message
 
 
 class SlicerApp:
     """WSGI callable implementing the slicer API over a QueryEngine."""
 
-    def __init__(self, engine: QueryEngine, info: dict | None = None) -> None:
+    def __init__(self, engine: QueryEngine) -> None:
         self.engine = engine
         self.registry = engine.registry
-        self.info = info or {"api_version": 2, "authentication": "none",
-                             "json_record_limit": 500}
 
     # -- WSGI plumbing ------------------------------------------------------
 
@@ -59,7 +57,7 @@ class SlicerApp:
             body, content_type = self._route(path, params)
             status = "200 OK"
         except HttpError as e:
-            body = json.dumps({"error": e.message}).encode()
+            body = json.dumps({"error": str(e)}).encode()
             content_type, status = "application/json", e.status
         except KeyError as e:
             body = json.dumps({"error": f"not found: {e}"}).encode()
@@ -76,110 +74,117 @@ class SlicerApp:
     def _route(self, path: str, q: dict) -> tuple[bytes, str]:
         parts = [p for p in path.split("/") if p]
         if parts == ["info"]:
-            return self._json(self.info)
+            return self._json(INFO)
         if parts == ["cubes"]:
             return self._json(self.registry.list_cubes())
         if len(parts) >= 3 and parts[0] == "cube":
-            name = parts[1]
-            if name not in self.registry:
-                raise HttpError("404 Not Found", f"unknown cube {name!r}")
-            handler: Callable | None = {
+            if parts[1] not in self.registry:
+                raise HttpError("404 Not Found", f"unknown cube {parts[1]!r}")
+            cube = self.registry.get(parts[1])
+            handler = {
                 "model": self._model, "facts": self._facts,
                 "aggregate": self._aggregate, "cell": self._cell_info,
             }.get(parts[2])
             if handler and len(parts) == 3:
-                return handler(name, q)
+                return handler(cube, q)
             if parts[2] == "members" and len(parts) == 4:
-                return self._members(name, parts[3], q)
+                return self._members(cube, parts[3], q)
             if parts[2] == "fact" and len(parts) == 4:
-                return self._fact(name, parts[3])
+                return self._fact(cube, parts[3])
         raise HttpError("404 Not Found", f"no route for {path!r}")
 
     @staticmethod
     def _json(obj) -> tuple[bytes, str]:
-        return (json.dumps(obj, default=_json_default).encode(),
-                "application/json")
+        return json.dumps(obj, default=str).encode(), "application/json"
 
-    def _spec(self, cube: str, q: dict) -> QuerySpec:
+    @staticmethod
+    def _csv(rows: list[dict], fieldnames: list[str]) -> tuple[bytes, str]:
+        buf = io.StringIO()
+        writer = csv.DictWriter(buf, fieldnames=fieldnames)
+        writer.writeheader()
+        writer.writerows(rows)
+        return buf.getvalue().encode(), "text/csv"
+
+    def _spec(self, cube: Cube, q: dict, facts: bool = False) -> QuerySpec:
+        """Parse a request and check every name it uses against the cube."""
         try:
-            return QuerySpec.from_params(
-                cube, cut=q.get("cut"), drilldown=q.get("drilldown"),
+            spec = QuerySpec.from_params(
+                cube.name, cut=q.get("cut"), drilldown=q.get("drilldown"),
                 order=q.get("order"), page=q.get("page"),
                 pagesize=q.get("pagesize"))
         except Exception as e:
             raise HttpError("400 Bad Request", f"bad query: {e}") from e
+        if min(spec.page or 0, spec.pagesize or 0) < 0:
+            raise HttpError("400 Bad Request",
+                            "bad query: page and pagesize must be >= 0")
+        dims = set(cube.dimensions)
+        orderable = ({*dims, *cube.measures, cube.fact_id} if facts else
+                     {*spec.drilldown, *(a.name for a in cube.aggregates)})
+        for kind, names, allowed in (
+                ("cut dimension", [c.dim for c in spec.cuts], dims),
+                ("drilldown dimension", spec.drilldown, dims),
+                ("order field", [t.field for t in spec.order], orderable)):
+            for n in names:
+                if n not in allowed:
+                    raise HttpError("400 Bad Request",
+                                    f"bad query: unknown {kind} {n!r}")
+        return spec
 
     # -- endpoints ----------------------------------------------------------
 
-    def _model(self, name: str, q: dict) -> tuple[bytes, str]:
-        return self._json(self.registry.get(name).to_model_dict())
+    def _model(self, cube: Cube, q: dict) -> tuple[bytes, str]:
+        return self._json(cube.to_model_dict())
 
-    def _facts(self, name: str, q: dict) -> tuple[bytes, str]:
-        df = self.engine.facts(self._spec(name, q))
+    def _facts(self, cube: Cube, q: dict) -> tuple[bytes, str]:
+        df = self.engine.facts(self._spec(cube, q, facts=True))
         rows = [r.asDict() for r in df.collect()]
         if q.get("format") == "csv":                       # S7 CSV export
-            buf = io.StringIO()
-            writer = csv.DictWriter(buf, fieldnames=df.columns)
-            writer.writeheader()
-            writer.writerows(rows)
-            return buf.getvalue().encode(), "text/csv"
+            return self._csv(rows, df.columns)
         return self._json(rows)
 
-    def _aggregate(self, name: str, q: dict) -> tuple[bytes, str]:
-        spec = self._spec(name, q)
-        # ?approx_total=1 -> total_cell_count via approx_count_distinct
-        # on the same grouping-sets pass (the 100 TB drilldown knob;
-        # Q11 envelope semantics otherwise unchanged)
-        approx = str(q.get("approx_total", "")).lower() in ("1", "true")
-        env = self.engine.aggregate_envelope(spec, approx_total=approx)
+    def _aggregate(self, cube: Cube, q: dict) -> tuple[bytes, str]:
+        spec = self._spec(cube, q)
+        env = self.engine.aggregate_envelope(spec)
         env["cell"] = [c.to_string() for c in spec.cuts]
         env["drilldown"] = list(spec.drilldown)
         if q.get("format") == "csv":
             # cubes' slicer serves aggregate CSV as the drilldown cells
-            # (or the lone summary row when there is no drilldown) —
-            # completes the S7 surface beyond facts (VERDICT r06 item 6)
-            rows = env["cells"] or [env["summary"]]
-            buf = io.StringIO()
-            writer = csv.DictWriter(buf, fieldnames=list(rows[0].keys()))
-            writer.writeheader()
-            writer.writerows(rows)
-            return buf.getvalue().encode(), "text/csv"
+            # (or the lone summary row when there is no drilldown)
+            return self._csv(
+                env["cells"] if spec.drilldown else [env["summary"]],
+                [*spec.drilldown, *(a.name for a in cube.aggregates)])
         return self._json(env)
 
-    def _members(self, name: str, dim: str, q: dict) -> tuple[bytes, str]:
+    def _members(self, cube: Cube, dim: str, q: dict) -> tuple[bytes, str]:
+        spec = self._spec(cube, q)
         try:
-            page = int(q["page"]) if "page" in q else None
-            pagesize = int(q["pagesize"]) if "pagesize" in q else None
-        except ValueError as e:
-            raise HttpError("400 Bad Request", f"bad query: {e}") from e
-        try:
-            df = self.engine.members(name, dim, page, pagesize)
-        except ValueError as e:        # unknown cube / dimension
+            df = self.engine.members(cube.name, dim, spec.page, spec.pagesize)
+        except ValueError as e:        # unknown dimension
             raise HttpError("404 Not Found", str(e)) from e
         return self._json([r[dim] for r in df.collect()])
 
-    def _fact(self, name: str, fact_id: str) -> tuple[bytes, str]:
-        cube = self.registry.get(name)
+    def _fact(self, cube: Cube, fact_id: str) -> tuple[bytes, str]:
         value: object = fact_id
         # fact ids are stable row numbers / integer keys where declared
         if fact_id.lstrip("-").isdigit():
             value = int(fact_id)
         try:
-            rows = [r.asDict() for r in self.engine.fact(name, value).collect()]
+            rows = [r.asDict()
+                    for r in self.engine.fact(cube.name, value).collect()]
         except ValueError as e:        # cube declares no fact_id column
             raise HttpError("404 Not Found", str(e)) from e
         if not rows:
             raise HttpError("404 Not Found", f"no fact {fact_id!r}")
         return self._json(rows[0])
 
-    def _cell_info(self, name: str, q: dict) -> tuple[bytes, str]:
-        spec = self._spec(name, q)
-        summary_rows = self.engine.cells(
-            QuerySpec(cube=name, cuts=spec.cuts)).collect()
+    def _cell_info(self, cube: Cube, q: dict) -> tuple[bytes, str]:
+        spec = self._spec(cube, q)
+        env = self.engine.aggregate_envelope(
+            QuerySpec(cube=cube.name, cuts=spec.cuts))
         return self._json({
-            "cube": name,
+            "cube": cube.name,
             "cell": [c.to_string() for c in spec.cuts],
-            "summary": summary_rows[0].asDict() if summary_rows else {},
+            "summary": env["summary"],
         })
 
 

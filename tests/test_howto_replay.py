@@ -246,17 +246,19 @@ def test_howto_aggregate_csv_export(app):
     assert "apc_amount_sum" in lines[0].split(",")
 
 
-def test_howto_approx_total_envelope_parity(app):
-    """VERDICT r06 item 8: the ?approx_total=1 knob replayed at HTTP level
-    on the reference-shaped cube — identical envelope SHAPE (keys, cells,
-    summary) to the exact path; total_cell_count numeric both ways."""
-    _, exact = call(app, "/cube/bielefeld_u/aggregate",
+def test_howto_paged_envelope_parity(app):
+    """Paging the reference-shaped cube's drilldown: the pages concatenate
+    to the unpaged cells, every page carries the same summary, and
+    total_cell_count stays the full cardinality, past the last page too."""
+    _, whole = call(app, "/cube/bielefeld_u/aggregate",
                     "drilldown=publisher&order=publisher")
-    _, approx = call(app, "/cube/bielefeld_u/aggregate",
-                     "drilldown=publisher&order=publisher&approx_total=1")
-    assert set(exact) == set(approx)
-    assert exact["cells"] == approx["cells"]
-    assert exact["summary"] == approx["summary"]
-    assert isinstance(approx["total_cell_count"], int)
-    # HLL++ is exact at this cardinality
-    assert approx["total_cell_count"] == exact["total_cell_count"]
+    cells = []
+    for page in range(3):
+        _, env = call(app, "/cube/bielefeld_u/aggregate",
+                      f"drilldown=publisher&order=publisher&pagesize=2"
+                      f"&page={page}")
+        assert set(env) == set(whole)
+        assert env["summary"] == whole["summary"]
+        assert env["total_cell_count"] == whole["total_cell_count"] == 3
+        cells += env["cells"]
+    assert cells == whole["cells"]

@@ -109,20 +109,48 @@ def test_envelope_with_cut(engine):
     assert env["total_cell_count"] == 3
 
 
-def test_envelope_approx_total(engine):
-    """VERDICT r05 item 9: approx_total rides an approx_count_distinct of
-    the drilldown tuple on the SAME grouping-sets pass (no extra count
-    job); cells and summary are identical to the exact path, the helper
-    column never leaks, and HLL++ is exact at small cardinality."""
+def test_envelope_is_one_action_without_persist(engine, spark, monkeypatch):
+    """aggregate_envelope answers with ONE DataFrame action and persists
+    nothing: DataFrame actions and cache calls are wrapped (as the
+    benchmark's tracer wraps them), the cache manager ends as it started,
+    and the plan's helper columns never reach the envelope."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    calls = []
+    for name in ("collect", "count", "persist", "cache", "toLocalIterator"):
+        def wrapped(self, *args, _orig=getattr(DataFrame, name), _name=name,
+                    **kwargs):
+            calls.append(_name)
+            return _orig(self, *args, **kwargs)
+        monkeypatch.setattr(DataFrame, name, wrapped)
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    was_empty = cache.isEmpty()
     spec = QuerySpec.from_params(
-        "mini", drilldown="institution", order="amount_sum:desc")
-    exact = engine.aggregate_envelope(spec)
-    approx = engine.aggregate_envelope(spec, approx_total=True)
-    assert approx["cells"] == exact["cells"]
-    assert approx["summary"] == exact["summary"]
-    assert approx["total_cell_count"] == exact["total_cell_count"] == 3
-    assert "__acc__" not in approx["summary"]
-    assert all("__acc__" not in c for c in approx["cells"])
+        "mini", drilldown="institution|period", order="amount_sum:desc",
+        page="1", pagesize="2")
+    env = engine.aggregate_envelope(spec)
+    assert calls == ["collect"]
+    assert cache.isEmpty() == was_empty
+    assert env["total_cell_count"] == 4
+    assert [(c["institution"], c["period"]) for c in env["cells"]] == [
+        ("uni a", "2020"), ("Uni A", "2019")]
+    assert env["summary"]["num_items"] == 6
+    text = repr(env)
+    for helper in ("__n__", "__rn__", "__gid__"):
+        assert helper not in text
+
+
+def test_envelope_page_past_end_and_empty_cut(engine):
+    """A page past the last cell keeps the exact total; a drilldown over an
+    empty cut has no summary row at all."""
+    env = engine.aggregate_envelope(QuerySpec.from_params(
+        "mini", drilldown="institution", page="5", pagesize="2"))
+    assert env["cells"] == []
+    assert env["total_cell_count"] == 3
+    assert env["summary"]["amount_sum"] == 2100.0
+    env = engine.aggregate_envelope(QuerySpec.from_params(
+        "mini", cut="institution:Nobody", drilldown="period"))
+    assert env == {"summary": {}, "cells": [], "total_cell_count": 0}
 
 
 def test_pagination_partition_property(engine):

@@ -75,24 +75,76 @@ def test_aggregate_envelope(app):
     assert [c["period"] for c in env["cells"]] == ["2019", "2020", "2021"]
     assert env["cells"][1]["amount_sum"] == 500.0
     assert env["drilldown"] == ["period"]
-    # ?approx_total=1 rides the same grouping-sets pass; identical
-    # envelope at this cardinality (HLL++ exact when tiny) and the
-    # helper column never leaks into the response
+    # pagination (VERDICT r10 #7): cells are the requested page while
+    # total_cell_count stays the FULL cardinality
     _, _, body2 = call(app, "/cube/srv/aggregate",
-                       "drilldown=period&order=period&approx_total=1")
+                       "drilldown=period&order=period&page=1&pagesize=2")
     env2 = json.loads(body2)
-    assert env2 == env
-    assert "__acc__" not in json.dumps(env2)
-    # pagination + approx_total compose (VERDICT r10 #7): cells are the
-    # requested page while total_cell_count stays the FULL cardinality —
-    # the 10^8-group-safe contract (500-cap pages + HLL total)
-    _, _, body3 = call(app, "/cube/srv/aggregate",
-                       "drilldown=period&order=period&page=1&pagesize=2"
-                       "&approx_total=1")
-    env3 = json.loads(body3)
-    assert [c["period"] for c in env3["cells"]] == ["2021"]
-    assert env3["total_cell_count"] == 3
-    assert env3["summary"] == env["summary"]
+    assert [c["period"] for c in env2["cells"]] == ["2021"]
+    assert env2["total_cell_count"] == 3
+    assert env2["summary"] == env["summary"]
+
+
+def test_aggregate_csv_header_without_cells(app):
+    """A drilldown with no matching cells still answers its CSV header."""
+    status, headers, body = call(
+        app, "/cube/srv/aggregate",
+        "drilldown=period&cut=institution:Nobody&format=csv")
+    assert status == "200 OK"
+    assert headers["Content-Type"] == "text/csv"
+    assert body.decode() == "period,amount_sum,num_items\r\n"
+    _, _, body = call(app, "/cube/srv/aggregate",
+                      "drilldown=institution|period&order=amount_sum:desc"
+                      "&format=csv&pagesize=1")
+    assert body.decode().splitlines() == [
+        "institution,period,amount_sum,num_items", "Uni B,2021,400.0,1"]
+
+
+@pytest.mark.parametrize("path,query", [
+    ("/cube/srv/facts", "cut=nope:1"),
+    ("/cube/srv/facts", "order=amount_sum"),
+    ("/cube/srv/facts", "drilldown=nope"),
+    ("/cube/srv/facts", "page=-1"),
+    ("/cube/srv/facts", "pagesize=-5"),
+    ("/cube/srv/aggregate", "cut=nope:1"),
+    ("/cube/srv/aggregate", "drilldown=nope"),
+    ("/cube/srv/aggregate", "drilldown=euro"),
+    ("/cube/srv/aggregate", "drilldown=fid"),
+    ("/cube/srv/aggregate", "drilldown=period&order=euro"),
+    ("/cube/srv/aggregate", "drilldown=period&order=institution"),
+    ("/cube/srv/aggregate", "drilldown=period&page=-1"),
+    ("/cube/srv/aggregate", "drilldown=period&pagesize=-1"),
+    ("/cube/srv/cell", "cut=nope:1"),
+    ("/cube/srv/cell", "drilldown=nope"),
+    ("/cube/srv/cell", "order=nope"),
+    ("/cube/srv/members/institution", "page=-1"),
+])
+def test_invalid_requests_are_400_json(app, path, query):
+    """Names the cube does not declare, and negative paging, are rejected
+    before any plan is built: a 400 with a JSON error body."""
+    status, headers, body = call(app, path, query)
+    assert status == "400 Bad Request"
+    assert headers["Content-Type"] == "application/json"
+    assert json.loads(body)["error"].startswith("bad query")
+
+
+def test_valid_order_names_are_accepted(app):
+    """facts order by dimension, measure or fact id; aggregate order by a
+    drilldown or an aggregate."""
+    for path, query in [
+            ("/cube/srv/facts", "order=period:desc,euro,fid"),
+            ("/cube/srv/aggregate", "drilldown=period&order=num_items:desc"),
+            ("/cube/srv/aggregate", "drilldown=period&order=period:desc"),
+            ("/cube/srv/aggregate", "order=amount_sum"),
+            ("/cube/srv/cell", "cut=period:2020")]:
+        status, _, _ = call(app, path, query)
+        assert status == "200 OK", (path, query)
+
+
+def test_info_document(app):
+    _, _, body = call(app, "/info")
+    assert json.loads(body) == {"api_version": 2, "authentication": "none",
+                                "json_record_limit": 500}
 
 
 def test_members_fact_cell_and_errors(app):
