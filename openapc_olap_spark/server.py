@@ -18,20 +18,46 @@ Responses carry CORS (olap_server.py:4,8) and respect the hard 500-row cap
 negative page, is a 400 JSON error before any plan is built. The Spark
 driver is the web process; executors do the work —
 the same topology as the reference's server→PostgreSQL split (SURVEY.md §3.1).
+
+``serve`` runs each request on its own thread. At most
+``2 × sparkContext.defaultParallelism`` requests are in flight; one more is
+answered ``503`` with a JSON error at once, never queued. Each request runs
+in its own Spark job group, named by its ``X-Request-Id`` header verbatim
+(or a generated id), so its jobs can be told apart and cancelled. A request
+still running after ``REQUEST_DEADLINE_S`` has that group cancelled and is
+answered ``503`` "deadline exceeded". Any other failure is a ``500`` JSON
+error naming the exception type; its traceback goes to stderr with the
+request id, never to the client.
+
+A request's py4j proxies form reference cycles that pin its Catalyst plans in
+the JVM until Python runs a full collection, so every request ends with
+``gc.collect()``. ``serve`` freezes the set-up's objects first
+(``gc.freeze``), which keeps that collection under a millisecond.
 """
 
 from __future__ import annotations
 
 import csv
+import gc
 import io
 import json
+import socketserver
+import sys
+import threading
+import traceback
+import uuid
 from urllib.parse import parse_qs
+from wsgiref.simple_server import WSGIServer
+from wsgiref.simple_server import make_server as _make_server
 
 from openapc_olap_spark.model import Cube
 from openapc_olap_spark.query import JSON_RECORD_LIMIT, QueryEngine, QuerySpec
 
 INFO = {"api_version": 2, "authentication": "none",
         "json_record_limit": JSON_RECORD_LIMIT}
+
+# Kept below the 120 s HTTP timeout of slicer clients (perfbench/run.py).
+REQUEST_DEADLINE_S = 60.0
 
 
 class HttpError(Exception):
@@ -46,28 +72,64 @@ class SlicerApp:
     def __init__(self, engine: QueryEngine) -> None:
         self.engine = engine
         self.registry = engine.registry
+        self._sc = engine.spark.sparkContext
+        self._slots = threading.BoundedSemaphore(
+            2 * self._sc.defaultParallelism)
 
     # -- WSGI plumbing ------------------------------------------------------
 
     def __call__(self, environ, start_response):
-        path = environ.get("PATH_INFO", "/")
-        params = {k: v[0] for k, v in
-                  parse_qs(environ.get("QUERY_STRING", "")).items()}
-        try:
-            body, content_type = self._route(path, params)
-            status = "200 OK"
-        except HttpError as e:
-            body = json.dumps({"error": str(e)}).encode()
-            content_type, status = "application/json", e.status
-        except KeyError as e:
-            body = json.dumps({"error": f"not found: {e}"}).encode()
-            content_type, status = "application/json", "404 Not Found"
+        rid = environ.get("HTTP_X_REQUEST_ID") or uuid.uuid4().hex
+        if self._slots.acquire(blocking=False):
+            try:
+                status, body, content_type = self._answer(environ, rid)
+            finally:
+                gc.collect()
+                self._slots.release()
+        else:
+            status, body, content_type = _error(
+                "503 Service Unavailable", "server busy: too many requests")
         start_response(status, [
             ("Content-Type", content_type),
             ("Content-Length", str(len(body))),
             ("Access-Control-Allow-Origin", "*"),
         ])
         return [body]
+
+    def _answer(self, environ, rid: str) -> tuple[str, bytes, str]:
+        """Route one request in its own Spark job group, cancelled when the
+        request outlives ``REQUEST_DEADLINE_S``."""
+        path = environ.get("PATH_INFO", "/")
+        params = {k: v[0] for k, v in
+                  parse_qs(environ.get("QUERY_STRING", "")).items()}
+        # thread-local under PySpark's pinned-thread mode
+        self._sc.setJobGroup(rid, path)
+        expired = threading.Event()
+
+        def expire():
+            expired.set()
+            self._sc.cancelJobGroup(rid)
+
+        timer = threading.Timer(REQUEST_DEADLINE_S, expire)
+        timer.daemon = True
+        timer.start()
+        try:
+            return ("200 OK", *self._route(path, params))
+        except HttpError as e:
+            return _error(e.status, str(e))
+        except KeyError as e:
+            return _error("404 Not Found", f"not found: {e}")
+        except Exception as e:
+            if expired.is_set():
+                return _error("503 Service Unavailable",
+                              f"deadline exceeded ({REQUEST_DEADLINE_S:g} s)")
+            sys.stderr.write(f"request {rid} failed: {path}\n"
+                             f"{traceback.format_exc()}")
+            return _error("500 Internal Server Error",
+                          f"internal error: {type(e).__name__} "
+                          f"(request {rid})")
+        finally:
+            timer.cancel()
 
     # -- routing ------------------------------------------------------------
 
@@ -188,9 +250,26 @@ class SlicerApp:
         })
 
 
+def _error(status: str, message: str) -> tuple[str, bytes, str]:
+    return status, json.dumps({"error": message}).encode(), "application/json"
+
+
+class ThreadingWSGIServer(socketserver.ThreadingMixIn, WSGIServer):
+    """``wsgiref``'s server with a thread per request; ``SlicerApp`` bounds
+    how many are in flight."""
+
+    daemon_threads = True
+
+
+def make_server(app: SlicerApp, host: str, port: int) -> ThreadingWSGIServer:
+    return _make_server(host, port, app, server_class=ThreadingWSGIServer)
+
+
 def serve(app: SlicerApp, host: str = "127.0.0.1", port: int = 5000) -> None:
     """Dev server (reference runs Flask's; production would front the WSGI
     app the same way openapc-olap.wsgi fronts the slicer)."""
-    from wsgiref.simple_server import make_server
-    with make_server(host, port, app) as srv:
+    with make_server(app, host, port) as srv:
+        # set-up is done: keep its objects out of every per-request collection
+        gc.collect()
+        gc.freeze()
         srv.serve_forever()

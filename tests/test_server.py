@@ -1,15 +1,25 @@
-"""HTTP façade contract tests (HOWTO.md:31-104 behaviors) via direct WSGI
-invocation — no sockets, same app object production would host."""
+"""HTTP façade contract tests (HOWTO.md:31-104 behaviors), mostly via
+direct WSGI invocation of the same app object production would host; the
+concurrency tests go through the threaded server ``serve()`` builds."""
 
+import gc
 import json
+import sys
+import threading
+import time
+import urllib.error
+import urllib.request
+from concurrent.futures import ThreadPoolExecutor
 
 import pytest
+from py4j.java_gateway import JavaObject
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from openapc_olap_spark import server
 from openapc_olap_spark.model import Aggregate, Cube, CubeRegistry
 from openapc_olap_spark.query import QueryEngine
-from openapc_olap_spark.server import SlicerApp
+from openapc_olap_spark.server import SlicerApp, make_server
 
 
 @pytest.fixture(scope="module")
@@ -30,16 +40,58 @@ def app(spark):
     return SlicerApp(QueryEngine(spark, reg))
 
 
-def call(app, path, query=""):
+def call(app, path, query="", request_id=None):
     captured = {}
 
     def start_response(status, headers):
         captured["status"] = status
         captured["headers"] = dict(headers)
 
-    body = b"".join(app({"PATH_INFO": path, "QUERY_STRING": query},
-                        start_response))
+    environ = {"PATH_INFO": path, "QUERY_STRING": query}
+    if request_id is not None:
+        environ["HTTP_X_REQUEST_ID"] = request_id
+    body = b"".join(app(environ, start_response))
     return captured["status"], captured["headers"], body
+
+
+@pytest.fixture(scope="module")
+def live(app):
+    """The app behind the threaded server ``serve()`` runs, on an
+    ephemeral port; yields a GET function returning (status, body)."""
+    srv = make_server(app, "127.0.0.1", 0)     # port 0 = ephemeral
+    port = srv.server_address[1]
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+
+    def get(path, timeout=30):
+        try:
+            with urllib.request.urlopen(
+                    f"http://127.0.0.1:{port}{path}", timeout=timeout) as r:
+                return r.status, r.headers["Content-Type"], r.read()
+        except urllib.error.HTTPError as e:
+            return e.code, e.headers["Content-Type"], e.read()
+
+    yield get
+    srv.shutdown()
+    srv.server_close()
+    t.join(timeout=10)
+    assert not t.is_alive()
+
+
+def block_engine(monkeypatch, app, method):
+    """Make ``app.engine.<method>`` wait for the returned event; the
+    semaphore counts calls that have entered it."""
+    entered, release = threading.Semaphore(0), threading.Event()
+    original = getattr(app.engine, method)
+
+    def blocked(*args, **kwargs):
+        entered.release()
+        if not release.wait(60):
+            raise TimeoutError("test never released the engine")
+        return original(*args, **kwargs)
+
+    monkeypatch.setattr(app.engine, method, blocked)
+    return entered, release
 
 
 def test_cubes_and_model(app):
@@ -178,42 +230,173 @@ def test_empty_result_is_empty_list(app):
     assert json.loads(body) == []
 
 
-def test_live_socket_replays_howto_urls(app):
+def test_live_socket_replays_howto_urls(live):
     """VERDICT r09 #7: the one gap in the HTTP story was that serve()'s
-    socket path was never exercised — bind wsgiref on an ephemeral port
-    in a thread and replay HOWTO.md:37-89-shaped URLs through a real
-    HTTP client (urllib), asserting the same envelopes the WSGI-direct
-    tests see."""
-    import threading
-    import urllib.request
-    from wsgiref.simple_server import make_server
+    socket path was never exercised — serve the app on the server class
+    serve() builds, on an ephemeral port in a thread, and replay
+    HOWTO.md:37-89-shaped URLs through a real HTTP client (urllib),
+    asserting the same envelopes the WSGI-direct tests see."""
+    def get(path):
+        status, content_type, body = live(path)
+        assert status == 200
+        assert content_type.startswith("application/json")
+        return json.loads(body)
 
-    srv = make_server("127.0.0.1", 0, app)     # port 0 = ephemeral
-    port = srv.server_address[1]
-    t = threading.Thread(target=srv.serve_forever, daemon=True)
-    t.start()
+    cubes = get("/cubes")                            # HOWTO.md:31
+    assert [c["name"] for c in cubes] == ["srv"]
+    model = get("/cube/srv/model")                   # HOWTO.md:95
+    assert {a["name"] for a in model["aggregates"]} >= {
+        "amount_sum", "num_items"}
+    facts = get("/cube/srv/facts?pagesize=2&page=1")  # HOWTO.md:42
+    assert len(facts) == 2
+    agg = get("/cube/srv/aggregate?drilldown=period"  # HOWTO.md:60
+              "&cut=institution:Uni%20B")
+    cells = {c["period"]: c["amount_sum"] for c in agg["cells"]}
+    assert cells == {"2020": 300.0, "2021": 400.0}
+    assert agg["summary"]["amount_sum"] == 700.0
+
+
+def test_blocked_request_does_not_block_others(app, live, monkeypatch):
+    """A request stuck in the engine leaves the server answering others."""
+    entered, release = block_engine(monkeypatch, app, "aggregate_envelope")
+    with ThreadPoolExecutor(1) as pool:
+        slow = pool.submit(live, "/cube/srv/aggregate?drilldown=period")
+        try:
+            assert entered.acquire(timeout=30)
+            for path in ("/info", "/cube/srv/model"):
+                status, _, _ = live(path, timeout=10)
+                assert status == 200, path
+        finally:
+            release.set()
+        status, _, body = slow.result(timeout=60)
+    assert status == 200
+    assert json.loads(body)["summary"]["amount_sum"] == 1000.0
+
+
+def test_full_server_answers_503_then_recovers(app, monkeypatch, spark):
+    """With every slot held, one more request is refused at once with a
+    503 JSON error; once the slots are free it is served."""
+    slots = 2 * spark.sparkContext.defaultParallelism
+    entered, release = block_engine(monkeypatch, app, "facts")
+    with ThreadPoolExecutor(slots) as pool:
+        held = [pool.submit(call, app, "/cube/srv/facts")
+                for _ in range(slots)]
+        try:
+            for _ in range(slots):
+                assert entered.acquire(timeout=30)
+            status, headers, body = call(app, "/cube/srv/model")
+        finally:
+            release.set()
+        assert [f.result(timeout=60)[0] for f in held] == ["200 OK"] * slots
+    assert status == "503 Service Unavailable"
+    assert headers["Content-Type"] == "application/json"
+    assert "busy" in json.loads(body)["error"]
+    status, _, _ = call(app, "/cube/srv/model")
+    assert status == "200 OK"
+
+
+def test_concurrent_answers_equal_sequential_ones(live):
+    """8 threads sending a mix of requests get the bytes each request gets
+    when sent alone."""
+    paths = ["/cubes", "/info", "/cube/srv/model",
+             "/cube/srv/facts?cut=institution:Uni%20A",
+             "/cube/srv/facts?order=euro:desc&format=csv",
+             "/cube/srv/aggregate?drilldown=period&order=period",
+             "/cube/srv/aggregate?drilldown=institution|period"
+             "&order=amount_sum:desc&pagesize=2",
+             "/cube/srv/aggregate?cut=period:2020",
+             "/cube/srv/members/institution",
+             "/cube/srv/fact/3",
+             "/cube/srv/cell?cut=institution:Uni%20B",
+             "/cube/srv/facts?cut=nope:1"]
+    alone = {p: live(p) for p in paths}
+    assert alone["/cube/srv/facts?cut=nope:1"][0] == 400
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
     try:
-        def get(path):
-            with urllib.request.urlopen(
-                    f"http://127.0.0.1:{port}{path}", timeout=30) as r:
-                assert r.status == 200
-                assert r.headers["Content-Type"].startswith(
-                    "application/json")
-                return json.loads(r.read())
-
-        cubes = get("/cubes")                            # HOWTO.md:31
-        assert [c["name"] for c in cubes] == ["srv"]
-        model = get("/cube/srv/model")                   # HOWTO.md:95
-        assert {a["name"] for a in model["aggregates"]} >= {
-            "amount_sum", "num_items"}
-        facts = get("/cube/srv/facts?pagesize=2&page=1")  # HOWTO.md:42
-        assert len(facts) == 2
-        agg = get("/cube/srv/aggregate?drilldown=period"  # HOWTO.md:60
-                  "&cut=institution:Uni%20B")
-        cells = {c["period"]: c["amount_sum"] for c in agg["cells"]}
-        assert cells == {"2020": 300.0, "2021": 400.0}
-        assert agg["summary"]["amount_sum"] == 700.0
+        with ThreadPoolExecutor(8) as pool:
+            together = list(pool.map(live, paths * 3))
     finally:
-        srv.shutdown()
-        srv.server_close()
-        t.join(timeout=10)
+        sys.setswitchinterval(switch)
+    assert together == [alone[p] for p in paths * 3]
+
+
+class _FailingEngine(QueryEngine):
+    def aggregate_envelope(self, spec):
+        raise RuntimeError("engine exploded")
+
+
+def test_unexpected_error_is_500_json(app, spark, capsys):
+    """An exception the handlers do not map is a 500 JSON error naming its
+    type, without a traceback; the traceback goes to stderr with the
+    request id."""
+    failing = SlicerApp(_FailingEngine(spark, app.registry))
+    status, headers, body = call(failing, "/cube/srv/aggregate",
+                                 "drilldown=period", request_id="req-500")
+    assert status == "500 Internal Server Error"
+    assert headers["Content-Type"] == "application/json"
+    error = json.loads(body)["error"]
+    assert "RuntimeError" in error and "req-500" in error
+    assert "Traceback" not in error and "exploded" not in error
+    err = capsys.readouterr().err
+    assert "req-500" in err and "RuntimeError: engine exploded" in err
+    assert call(failing, "/cube/srv/model")[0] == "200 OK"
+
+
+def test_deadline_cancels_the_request_job_group(app, spark, monkeypatch):
+    """A request past the deadline has its Spark job group cancelled and is
+    answered 503; no job of its group is left running."""
+    @F.udf("string")
+    def slow_period(i):
+        time.sleep(60)
+        return str(i)
+
+    spark.range(2, numPartitions=1).select(
+        slow_period("id").alias("period"),
+        F.lit(1.0).alias("euro")).createOrReplaceTempView("srv_slow")
+    reg = CubeRegistry()
+    reg.register(Cube(
+        name="slow", table="srv_slow", label="Slow", dimensions=("period",),
+        measures=("euro",), aggregates=(Aggregate("amount_sum", "euro",
+                                                  "sum"),)))
+    slow_app = SlicerApp(QueryEngine(spark, reg))
+    monkeypatch.setattr(server, "REQUEST_DEADLINE_S", 1.0)
+    t0 = time.monotonic()
+    status, headers, body = call(slow_app, "/cube/slow/aggregate",
+                                 "drilldown=period", request_id="req-slow")
+    assert time.monotonic() - t0 < 30
+    assert status == "503 Service Unavailable"
+    assert headers["Content-Type"] == "application/json"
+    assert "deadline exceeded" in json.loads(body)["error"]
+
+    tracker = spark.sparkContext.statusTracker()
+    jobs = tracker.getJobIdsForGroup("req-slow")
+    assert jobs
+
+    def running():
+        return [j for j in tracker.getJobIdsForGroup("req-slow")
+                if (info := tracker.getJobInfo(j)) is not None
+                and info.status == "RUNNING"]
+
+    end = time.monotonic() + 30
+    while running() and time.monotonic() < end:
+        time.sleep(0.1)
+    assert not running()
+
+
+def test_request_releases_its_jvm_proxies(app):
+    """A request leaves no py4j proxy in a reference cycle, so the JVM
+    objects it used (plans, columns) are freed when it ends, not at
+    Python's next full collection."""
+    call(app, "/cube/srv/aggregate", "drilldown=period")
+    gc.collect()
+    call(app, "/cube/srv/aggregate", "drilldown=period&order=amount_sum")
+    flags = gc.get_debug()
+    gc.set_debug(gc.DEBUG_SAVEALL)
+    try:
+        gc.collect()
+        leaked = sum(isinstance(o, JavaObject) for o in gc.garbage)
+    finally:
+        gc.set_debug(flags)
+        gc.garbage.clear()
+    assert leaked == 0
