@@ -414,6 +414,14 @@ ORACLES: dict[str, str] = {
 # iteration) and the local twin-runner (scripts/oracle_check.py) always
 # cover the full set.
 _CERT_FIRST = [
+    # ETL rotation: etl/openapc.py changed (the institutional manifest is
+    # built from the enriched frames, no raw-CSV persist, no validate
+    # option), so every gate whose engine deps include it rotates in.
+    "e01_enrich_ror", "e02_publication_key", "e03_deal_halving",
+    "e04_union_combined", "e06_prune_semi", "e07_priority_rank",
+    "e08_melt_explode", "e10_colon_scrub", "e11_doi_lookup",
+    "e12_institution_report", "e13_ac_institutions",
+    "e16_springer_coverage", "e19_manifest_roundtrip",
     # Query-stack rotation: query.py (aggregate_envelope answered by one
     # plan and one collect, no persist) and server.py (request validation,
     # one CSV writer) changed, so every gate whose engine deps include them
@@ -439,8 +447,8 @@ _CERT_PENDING: list[str] = []
 # window's free slot(s) re-run the OLDEST standing certs. The entries below
 # soak them up (and any excess spills past the window, where the manifest
 # guard still covers them byte-for-byte). Six r11 certs (x30, x32-x34,
-# x38, x39) joined so that the 33 _CERT_FIRST gates plus the refresh
-# entries fill all 50 slots.
+# x38, x39) joined so that the _CERT_FIRST gates (33 then, 46 now) plus the
+# refresh entries fill all 50 slots.
 _CERT_REFRESH = [
     "x10_sliding_windows", "x11_session_stats", "x12_props_json",
     "x13_salted_drilldown", "x15_media_metadata", "x17_ivf_ann",
@@ -457,13 +465,9 @@ _CERT_TAIL = [
     # drifted — including a drifted or partially-uncommitted deps LIST).
     # The r15 text-family gates that CORRECTNESS_r15.json certified and
     # whose hashes still match the committed manifest hold that cert here.
-    "e01_enrich_ror", "e02_publication_key", "e03_deal_halving",
-    "e04_union_combined", "e05_coverage_zerofill", "e06_prune_semi",
-    "e07_priority_rank", "e08_melt_explode", "e09_journal_id",
-    "e10_colon_scrub", "e11_doi_lookup", "e12_institution_report",
-    "e13_ac_institutions", "e14_annual_pubdates", "e15_hybrid_catalog",
-    "e16_springer_coverage", "e17_cache_upsert", "e19_manifest_roundtrip",
-    "e20_json_cache", "x01_dedup_summary", "x02_ngram_jaccard",
+    "e05_coverage_zerofill", "e09_journal_id", "e14_annual_pubdates",
+    "e15_hybrid_catalog", "e17_cache_upsert", "e20_json_cache",
+    "x01_dedup_summary", "x02_ngram_jaccard",
     "x03_minhash_neardup", "x04_simhash_neardup", "x05_ann_topk",
     "x06_lsh_neardup_embeddings", "x07_text_metrics",
     "x08_langid_distribution", "x09_tumbling_daily", "x101_txn_zorder",

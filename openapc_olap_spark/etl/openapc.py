@@ -9,8 +9,9 @@ static cubes + manifest.
 Scale design notes (100 TB posture):
 - the institutions dimension is broadcast (reference: in-memory dict probe,
   assets_generator.py:704-721) — no shuffle on any enrichment join;
-- fan-out to many cubes reuses ONE persisted source scan per input file
-  (reference T6: a Python loop appending each row to 1..4 tables);
+- fan-out to many cubes reuses ONE persisted enriched frame per fact file
+  (apc, bpc, ta; reference T6: a Python loop appending each row to 1..4
+  tables), and ``write`` releases those frames on every exit path;
 - fail-fast "unknown institution" parity is an anti-join count, not a
   driver-side probe (reference aborts on KeyError, :487-492,521);
 - per-institution tables become ONE table per cube type partitioned by
@@ -23,7 +24,7 @@ from __future__ import annotations
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from openapc_olap_spark.etl import schemas
@@ -43,6 +44,12 @@ DEAL_IMPRINTS = {
         "The Econometric Society",
     ],
     "Springer Nature": ["Springer Nature", "Zhejiang University Press"],
+}
+
+# TA `agreement` values routed to the deal cube, per DEAL brand (…:447-469)
+DEAL_AGREEMENTS = {
+    "Wiley-Blackwell": "DEAL Wiley Germany",
+    "Springer Nature": "DEAL Springer Nature Germany",
 }
 
 # DEAL start years; APC-side eligibility is a strict `>` on Jan-1 datetimes,
@@ -199,16 +206,16 @@ class InputPaths:
 class OpenAPCPipeline:
     """Builds the seven static cubes + institutional manifest from raw CSVs.
 
-    Each ``*_cube`` method returns an unevaluated DataFrame; ``build_all``
-    persists the shared sources once (the reference's fan-out T6) and
-    ``write`` materializes Parquet tables.
+    Each ``*_cube`` method returns an unevaluated DataFrame. The enriched
+    apc/bpc/ta frames and the institutions dimension are persisted on first
+    use, so every cube that fans out from them (the reference's T6) shares
+    one scan; ``write`` materializes Parquet tables and then unpersists
+    them, whether or not it succeeds.
     """
 
-    def __init__(self, spark: SparkSession, paths: InputPaths,
-                 validate: bool = True) -> None:
+    def __init__(self, spark: SparkSession, paths: InputPaths) -> None:
         self.spark = spark
         self.paths = paths
-        self.validate = validate
         self._cache: dict[str, DataFrame] = {}
         # (kind, source_name, Observation) triples registered by the
         # validation observes; drained by check_validations().
@@ -221,12 +228,6 @@ class OpenAPCPipeline:
         (the reference's csv.DictReader shape)."""
         return self.spark.read.csv(path, header=True, inferSchema=False,
                                    encoding="UTF-8", quote='"', escape='"')
-
-    def _source(self, name: str, path: str) -> DataFrame:
-        if name not in self._cache:
-            df = self._read_csv(path)
-            self._cache[name] = df.persist()
-        return self._cache[name]
 
     @property
     def institutions(self) -> DataFrame:
@@ -260,17 +261,14 @@ class OpenAPCPipeline:
         ``write()`` (and ``check_validations()``) raise after the action.
         """
         joined = df.join(F.broadcast(self.institutions), "institution", "left")
-        if self.validate:
-            obs = Observation()
-            joined = joined.observe(
-                obs,
-                F.count(F.when(F.col("_country").isNull(), 1))
-                 .alias("n_unknown"),
-                F.slice(F.sort_array(F.collect_set(
-                    F.when(F.col("_country").isNull(), F.col("institution")))),
-                    1, 20).alias("examples"))
-            self._pending_checks.append(
-                ("unknown_institution", source_name, obs))
+        obs = Observation()
+        joined = joined.observe(
+            obs,
+            F.count(F.when(F.col("_country").isNull(), 1)).alias("n_unknown"),
+            F.slice(F.sort_array(F.collect_set(
+                F.when(F.col("_country").isNull(), F.col("institution")))),
+                1, 20).alias("examples"))
+        self._pending_checks.append(("unknown_institution", source_name, obs))
         return joined
 
     def check_validations(self) -> None:
@@ -307,7 +305,7 @@ class OpenAPCPipeline:
         """APC rows + colon scrub + country/institution_ror enrichment +
         float euro (assets_generator.py:511-529)."""
         if "apc_enriched" not in self._cache:
-            df = self._source("apc", self.paths.apc)
+            df = self._read_csv(self.paths.apc)
             df = scrub_colons(df, "journal_full_title")
             df = self._enrich(df, "APC file")
             df = (df.withColumn("country", F.col("_country"))
@@ -319,7 +317,7 @@ class OpenAPCPipeline:
     def ta_enriched(self) -> DataFrame:
         """TA rows + colon scrub + country (assets_generator.py:420-446)."""
         if "ta_enriched" not in self._cache:
-            df = self._source("ta", self.paths.transformative_agreements)
+            df = self._read_csv(self.paths.transformative_agreements)
             df = scrub_colons(df, "journal_full_title")
             df = self._enrich(df, "Transformative Agreements file")
             df = df.withColumn("country", F.col("_country"))
@@ -330,7 +328,7 @@ class OpenAPCPipeline:
         """E15: BPC rows + book-title scrub + country
         (assets_generator.py:343-356)."""
         if "bpc_enriched" not in self._cache:
-            df = self._source("bpc", self.paths.bpc)
+            df = self._read_csv(self.paths.bpc)
             df = scrub_colons(df, "book_title")
             df = self._enrich(df, "BPC file")
             df = (df.withColumn("country", F.col("_country"))
@@ -377,7 +375,7 @@ class OpenAPCPipeline:
     def additional_costs_long(self) -> DataFrame:
         """E16 output: (doi, cost_type, euro double)."""
         return melt_additional_costs(
-            self._source("ac", self.paths.additional_costs))
+            self._read_csv(self.paths.additional_costs))
 
     # -- diagnostics (T10/T11) -------------------------------------------------
 
@@ -409,17 +407,15 @@ class OpenAPCPipeline:
         """
         apc = self.apc_enriched().withColumn("publication_key",
                                              publication_key())
-        if self.validate:
-            obs = Observation()
-            key_null = F.col("publication_key").isNull()
-            apc = apc.observe(
-                obs,
-                F.count(F.when(key_null, 1)).alias("n_missing"),
-                F.min(F.when(key_null, F.to_json(F.struct("institution",
-                                                          "period", "doi",
-                                                          "url"))))
-                 .alias("example"))
-            self._pending_checks.append(("publication_key", "APC file", obs))
+        obs = Observation()
+        key_null = F.col("publication_key").isNull()
+        apc = apc.observe(
+            obs,
+            F.count(F.when(key_null, 1)).alias("n_missing"),
+            F.min(F.when(key_null, F.to_json(F.struct("institution", "period",
+                                                      "doi", "url"))))
+             .alias("example"))
+        self._pending_checks.append(("publication_key", "APC file", obs))
         apc_rows = (apc.withColumn("cost_type", F.lit("apc"))
                        .withColumn("cost_category", F.lit("APC")))
         costs = self.additional_costs_long()
@@ -434,7 +430,7 @@ class OpenAPCPipeline:
     def _opt_out(self, path: str, brand: str, halve: bool) -> DataFrame:
         """Opt-out source: opt_out=TRUE + imprint normalization (+ 2019
         halving for Wiley) + country (assets_generator.py:382-418)."""
-        df = self._source(f"optout_{brand}", path)
+        df = self._read_csv(path)
         df = df.withColumn("opt_out", F.lit("TRUE"))
         df = normalize_imprints(df, brand)
         df = self._enrich(df, f"{brand} opt-out file")
@@ -444,11 +440,11 @@ class OpenAPCPipeline:
             df = halve_2019_euro(df)
         return df
 
-    def _ta_deal(self, agreement: str, brand: str, halve: bool) -> DataFrame:
+    def _ta_deal(self, brand: str, halve: bool) -> DataFrame:
         """E10: TA rows routed to deal by agreement value, opt_out=FALSE
         (assets_generator.py:447-469)."""
         df = (self.ta_enriched()
-              .filter(F.col("agreement") == agreement)
+              .filter(F.col("agreement") == DEAL_AGREEMENTS[brand])
               .withColumn("opt_out", F.lit("FALSE"))
               .withColumn("euro", F.expr("try_cast(euro AS double)")))
         if halve:
@@ -470,8 +466,8 @@ class OpenAPCPipeline:
         parts = [
             self._opt_out(self.paths.wiley_opt_out, "Wiley-Blackwell", halve=True),
             self._opt_out(self.paths.springer_opt_out, "Springer Nature", halve=False),
-            self._ta_deal("DEAL Wiley Germany", "Wiley-Blackwell", halve=True),
-            self._ta_deal("DEAL Springer Nature Germany", "Springer Nature", halve=False),
+            self._ta_deal("Wiley-Blackwell", halve=True),
+            self._ta_deal("Springer Nature", halve=False),
             self._apc_deal("Wiley-Blackwell", DEAL_WILEY_START_YEAR),
             self._apc_deal("Springer Nature", DEAL_SPRINGER_START_YEAR),
         ]
@@ -479,21 +475,6 @@ class OpenAPCPipeline:
         for p in parts[1:]:
             out = out.unionByName(self._project(p, schemas.DEAL_COLUMNS))
         return out
-
-    def deal_participants(self) -> DataFrame:
-        """Institutions flagged deal_participant — those appearing in
-        opt-out files or TA-DEAL rows (NOT the APC-side rows; reference sets
-        the flag only at :401,418,459,469)."""
-        parts = [
-            self._opt_out(self.paths.wiley_opt_out, "Wiley-Blackwell", True),
-            self._opt_out(self.paths.springer_opt_out, "Springer Nature", False),
-            self._ta_deal("DEAL Wiley Germany", "Wiley-Blackwell", True),
-            self._ta_deal("DEAL Springer Nature Germany", "Springer Nature", False),
-        ]
-        out = parts[0].select("institution")
-        for p in parts[1:]:
-            out = out.unionByName(p.select("institution"))
-        return out.distinct()
 
     # -- build + write ---------------------------------------------------------
 
@@ -518,27 +499,36 @@ class OpenAPCPipeline:
         plain 'apc' (T7, :644-654); deal is pruned for non-participants
         (T8, :655-662). Priority = rank within the fixed type order among
         the types that institution actually has (T9, :697-702).
-        """
-        spark = self.spark
-        frames = []
 
+        Built from the persisted enriched frames plus two small raw reads
+        (the additional-costs and opt-out files), never from the cube plans:
+        openapc_ac's non-'apc' rows are exactly the APC rows whose DOI has a
+        numeric non-'apc' cost, and every participant row is a deal row.
+        """
         def present(df: DataFrame, cube_type: str) -> DataFrame:
             return (df.select("institution").distinct()
                     .withColumn("cube_type", F.lit(cube_type)))
 
-        frames.append(present(self.apc_enriched(), "apc"))
         # T7: apc_ac only where a non-'apc' cost row exists
-        ac = (self.openapc_ac_cube().filter(F.col("cost_type") != "apc")
-              .select("institution").distinct()
-              .withColumn("cube_type", F.lit("apc_ac")))
-        frames.append(ac)
-        frames.append(present(self.bpc_enriched(), "bpc"))
-        frames.append(present(self.ta_enriched(), "ta"))
-        # T8: deal only for participants
-        deal = (self.deal_cube().select("institution").distinct()
-                .join(self.deal_participants(), "institution", "left_semi")
-                .withColumn("cube_type", F.lit("deal")))
-        frames.append(deal)
+        ac = institutions_with_additional_costs(
+            self.apc_enriched(),
+            self.additional_costs_long().filter(F.col("cost_type") != "apc"))
+        # T8: deal only for participants — institutions in an opt-out file
+        # or on a TA-DEAL row (NOT the APC-side rows; the reference sets the
+        # flag only at :401,418,459,469)
+        participants = (
+            self._read_csv(self.paths.wiley_opt_out).select("institution")
+            .unionByName(self._read_csv(self.paths.springer_opt_out)
+                         .select("institution"))
+            .unionByName(self.ta_enriched()
+                         .filter(F.col("agreement")
+                                 .isin(*DEAL_AGREEMENTS.values()))
+                         .select("institution")))
+        frames = [present(self.apc_enriched(), "apc"),
+                  present(ac, "apc_ac"),
+                  present(self.bpc_enriched(), "bpc"),
+                  present(self.ta_enriched(), "ta"),
+                  present(participants, "deal")]
 
         all_pairs = frames[0]
         for f in frames[1:]:
@@ -553,7 +543,6 @@ class OpenAPCPipeline:
 
         # T9: priority = rank of cube_type in CUBES_PRIORITIES among present
         order = F.array(*[F.lit(t) for t in CUBES_PRIORITIES])
-        from pyspark.sql import Window
         w = (Window.partitionBy("institution")
              .orderBy(F.array_position(order, F.col("cube_type"))))
         return (pairs
@@ -581,32 +570,41 @@ class OpenAPCPipeline:
         """Materialize cubes as Parquet. The per-institution tables of the
         reference become partitionBy('institution') on the shared cubes —
         partition pruning gives the same per-institution access pattern
-        without N×5 physical tables (SURVEY.md §4)."""
-        for name, df in self.build_all().items():
-            df = self.with_fact_id(df)
-            path = os.path.join(out_dir, name)
-            partitioned = "institution" in df.columns and name != "doi_lookup"
-            # cluster rows by (institution, period) inside each task so
-            # period cuts (the dominant slicer predicate) skip row groups
-            # via parquet min/max stats — free at write time, per-partition,
-            # no shuffle. Institution MUST lead when the write is
-            # partitioned: the dynamic-partition writer otherwise inserts
-            # its own (unstable) sort on the partition column, which would
-            # destroy the period clustering inside each institution's file.
-            keys = ([] if not partitioned else ["institution"]) \
-                + (["period"] if "period" in df.columns else [])
-            if keys:
-                df = df.sortWithinPartitions(*keys)
-            writer = df.write.mode("overwrite")
-            if partitioned:
-                writer = writer.partitionBy("institution")
-            writer.parquet(path)
-        (self.institutional_manifest()
-         .coalesce(1).write.mode("overwrite")
-         .option("header", True)
-         .csv(os.path.join(out_dir, "institutional_cubes")))
-        if self.validate:
+        without N×5 physical tables (SURVEY.md §4). The persisted frames are
+        released when it returns or raises."""
+        try:
+            for name, df in self.build_all().items():
+                df = self.with_fact_id(df)
+                path = os.path.join(out_dir, name)
+                partitioned = "institution" in df.columns and name != "doi_lookup"
+                # cluster rows by (institution, period) inside each task so
+                # period cuts (the dominant slicer predicate) skip row groups
+                # via parquet min/max stats — free at write time,
+                # per-partition, no shuffle. Institution MUST lead when the
+                # write is partitioned: the dynamic-partition writer otherwise
+                # inserts its own (unstable) sort on the partition column,
+                # which would destroy the period clustering inside each
+                # institution's file.
+                keys = ([] if not partitioned else ["institution"]) \
+                    + (["period"] if "period" in df.columns else [])
+                if keys:
+                    df = df.sortWithinPartitions(*keys)
+                writer = df.write.mode("overwrite")
+                if partitioned:
+                    writer = writer.partitionBy("institution")
+                writer.parquet(path)
+            (self.institutional_manifest()
+             .coalesce(1).write.mode("overwrite")
+             .option("header", True)
+             .csv(os.path.join(out_dir, "institutional_cubes")))
             # The write actions above materialized every enriched source, so
             # all observations have fired; raises on the first tripped check
             # (reference abort parity, at zero extra scan cost).
             self.check_validations()
+        finally:
+            for df in self._cache.values():
+                df.unpersist()
+            self._cache.clear()
+            # after a failed write some observed plans never ran, and
+            # Observation.get would block on them
+            self._pending_checks = []

@@ -2,6 +2,8 @@
 derived-cube row counts + spot rows — halving E8, melt/explode E16/E17,
 prunes T7/T8, fail-fast E2)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -35,17 +37,28 @@ def test_openapc_cube(pipeline):
     assert by_doi["10.1002/apc2"]["euro"] == 1200.0
 
 
-def test_unknown_institution_aborts(spark, openapc_fixture_dir, tmp_path):
+def corpus_copy(src, tmp_path, **extra_rows):
+    """A copy of the fixture corpus with rows appended to some of its CSVs,
+    keyed by file stem (``apc_de=[row, ...]``)."""
     import csv
     import shutil
-    bad_dir = tmp_path / "bad"
-    shutil.copytree(openapc_fixture_dir, bad_dir)
-    with open(bad_dir / "apc_de.csv", "a", newline="") as f:
-        w = csv.writer(f)
-        w.writerow(["Unknown U", "2021", "100.00", "10.1/x", "FALSE", "P",
-                    "J", "NA", "NA", "NA", "NA", "NA", "NA", "NA", "NA",
-                    "NA", "NA", "NA"])
-    p = OpenAPCPipeline(spark, InputPaths.under(str(bad_dir)))
+    d = tmp_path / "corpus"
+    shutil.copytree(src, d)
+    for stem, rows in extra_rows.items():
+        with open(d / f"{stem}.csv", "a", newline="") as f:
+            csv.writer(f).writerows(rows)
+    return str(d)
+
+
+UNKNOWN_APC_ROW = ["Unknown U", "2021", "100.00", "10.1/x", "FALSE", "P", "J",
+                   "NA", "NA", "NA", "NA", "NA", "NA", "NA", "NA", "NA", "NA",
+                   "NA"]
+
+
+def test_unknown_institution_aborts(spark, openapc_fixture_dir, tmp_path):
+    bad_dir = corpus_copy(openapc_fixture_dir, tmp_path,
+                          apc_de=[UNKNOWN_APC_ROW])
+    p = OpenAPCPipeline(spark, InputPaths.under(bad_dir))
     with pytest.raises(UnknownInstitutionError, match="Unknown U"):
         p.openapc_cube().collect()
         p.check_validations()
@@ -54,18 +67,27 @@ def test_unknown_institution_aborts(spark, openapc_fixture_dir, tmp_path):
 def test_unknown_institution_aborts_write(spark, openapc_fixture_dir, tmp_path):
     """Reference abort parity through the build path (assets_generator.py
     :487-492): write() raises after materializing, via observed metrics."""
-    import csv
-    import shutil
-    bad_dir = tmp_path / "bad"
-    shutil.copytree(openapc_fixture_dir, bad_dir)
-    with open(bad_dir / "apc_de.csv", "a", newline="") as f:
-        w = csv.writer(f)
-        w.writerow(["Unknown U", "2021", "100.00", "10.1/x", "FALSE", "P",
-                    "J", "NA", "NA", "NA", "NA", "NA", "NA", "NA", "NA",
-                    "NA", "NA", "NA"])
-    p = OpenAPCPipeline(spark, InputPaths.under(str(bad_dir)))
+    bad_dir = corpus_copy(openapc_fixture_dir, tmp_path,
+                          apc_de=[UNKNOWN_APC_ROW])
+    p = OpenAPCPipeline(spark, InputPaths.under(bad_dir))
     with pytest.raises(UnknownInstitutionError, match="Unknown U"):
         p.write(str(tmp_path / "out"))
+
+
+def test_write_releases_its_caches(spark, openapc_fixture_dir, tmp_path):
+    """write() unpersists every frame it persisted, whether it succeeds or
+    raises after the writes (unknown institution)."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    OpenAPCPipeline(spark, InputPaths.under(openapc_fixture_dir)).write(
+        str(tmp_path / "ok"))
+    assert cache.isEmpty()
+    bad_dir = corpus_copy(openapc_fixture_dir, tmp_path,
+                          apc_de=[UNKNOWN_APC_ROW])
+    p = OpenAPCPipeline(spark, InputPaths.under(bad_dir))
+    with pytest.raises(UnknownInstitutionError, match="Unknown U"):
+        p.write(str(tmp_path / "bad_out"))
+    assert cache.isEmpty()
 
 
 def test_generate_yamls_field_equivalent(pipeline, tmp_path):
@@ -216,10 +238,71 @@ def test_institutional_manifest(pipeline):
                   (4, "deal")]
 
 
+def test_manifest_builds_no_cube_plan(spark, openapc_fixture_dir,
+                                      monkeypatch):
+    """After build_all(), the manifest reuses the enriched frames: it builds
+    no openapc_ac or deal cube plan and enriches no source again."""
+    p = OpenAPCPipeline(spark, InputPaths.under(openapc_fixture_dir))
+    p.build_all()
+    calls = dict.fromkeys(("openapc_ac_cube", "deal_cube", "_enrich"), 0)
+    for name in calls:
+        def counted(*args, _orig=getattr(OpenAPCPipeline, name), _name=name,
+                    **kwargs):
+            calls[_name] += 1
+            return _orig(*args, **kwargs)
+        monkeypatch.setattr(OpenAPCPipeline, name, counted)
+    p.institutional_manifest()
+    assert calls == {"openapc_ac_cube": 0, "deal_cube": 0, "_enrich": 0}
+
+
+def test_manifest_deal_needs_a_participant_row(spark, openapc_fixture_dir,
+                                               tmp_path):
+    """T8: an institution whose only DEAL rows are APC-side (Wiley imprint,
+    DEU, not hybrid, 2021) is in the deal cube but gets no deal cube of its
+    own: only opt-out and TA-DEAL rows make a participant."""
+    d = corpus_copy(
+        openapc_fixture_dir, tmp_path,
+        institutions=[["Uni Zeta", "University Zeta", "zeta",
+                       "https://ror.org/06zeta66", "Europe", "DEU", "NW"]],
+        apc_de=[["Uni Zeta", "2021", "1700.00", "10.1002/zeta1", "FALSE",
+                 "Wiley-Blackwell", "Journal Z", "7777-1111", "NA", "NA",
+                 "NA", "CC BY", "TRUE", "NA", "NA", "NA", "NA", "TRUE"]])
+    p = OpenAPCPipeline(spark, InputPaths.under(d))
+    deal = rows_of(p.deal_cube().filter(F.col("institution") == "Uni Zeta"))
+    assert [(r["doi"], r["opt_out"]) for r in deal] == [
+        ("10.1002/zeta1", "FALSE")]
+    names = {r["cube_name"] for r in rows_of(p.institutional_manifest())
+             if r["institution"] == "Uni Zeta"}
+    assert names == {"zeta"}
+
+
+def test_manifest_apc_named_cost_column_is_not_additional(
+        spark, openapc_fixture_dir, tmp_path):
+    """T7: an additional-costs column literally named 'apc' melts into
+    cost_type 'apc' rows, which do not on their own give an institution an
+    apc_ac cube."""
+    import csv
+    d = corpus_copy(openapc_fixture_dir, tmp_path)
+    ac_path = os.path.join(d, "apc_de_additional_costs.csv")
+    with open(ac_path, newline="") as f:
+        header, *rows = list(csv.reader(f))
+    rows = [r + [""] for r in rows] + [
+        ["10.1002/apc8"] + [""] * (len(header) - 1) + ["99.00"]]
+    with open(ac_path, "w", newline="") as f:
+        csv.writer(f).writerows([header + ["apc"]] + rows)
+    p = OpenAPCPipeline(spark, InputPaths.under(d))
+    eps = rows_of(p.openapc_ac_cube().filter(F.col("doi") == "10.1002/apc8"))
+    assert sorted((r["cost_type"], r["euro"]) for r in eps) == [
+        ("apc", 99.0), ("apc", 3000.0)]
+    pairs = {(r["institution"], r["cube_type"])
+             for r in rows_of(p.institutional_manifest())}
+    assert ("Uni Epsilon", "apc") in pairs
+    assert [i for i, t in pairs if t == "apc_ac"] == ["TU Alpha"]
+
+
 def test_write_partitioned(pipeline, tmp_path):
     out = str(tmp_path / "cubes")
     pipeline.write(out)
-    import os
     assert os.path.isdir(os.path.join(out, "openapc"))
     # partitioned by institution -> directory per institution value
     parts = [p for p in os.listdir(os.path.join(out, "openapc"))
