@@ -382,12 +382,24 @@ class OpenAPCPipeline:
     def institutions_by_cube_type(self) -> DataFrame:
         """T10: sorted distinct institutions per non-apc cube type — the
         reference's console report (assets_generator.py:664-676).
-        Output: (cube_type, institutions array<string>)."""
+        Output: (cube_type, institutions array<string>).
+
+        Built like the manifest, from the enriched frames and the raw
+        opt-out files, never from the cube plans: those register
+        observations that only fire when the cube is written, so ``write``
+        after an uncollected report would wait on them. The deal set is the
+        participants plus the APC-side DEAL rows."""
+        deal = self._deal_participants()
+        for brand, start_year in (
+                ("Wiley-Blackwell", DEAL_WILEY_START_YEAR),
+                ("Springer Nature", DEAL_SPRINGER_START_YEAR)):
+            deal = deal.unionByName(
+                self._apc_deal(brand, start_year).select("institution"))
         return institutions_report({
-            "apc_ac": self.openapc_ac_cube().filter(F.col("cost_type") != "apc"),
+            "apc_ac": self._ac_institutions(),
             "bpc": self.bpc_enriched(),
             "ta": self.ta_enriched(),
-            "deal": self.deal_cube(),
+            "deal": deal,
         })
 
     def additional_cost_institutions(self) -> DataFrame:
@@ -489,6 +501,26 @@ class OpenAPCPipeline:
             "doi_lookup": self.doi_lookup_cube(),
         }
 
+    def _ac_institutions(self) -> DataFrame:
+        """T7: institutions with an APC row whose DOI has a non-'apc' cost —
+        the institutions of openapc_ac's non-'apc' rows."""
+        return institutions_with_additional_costs(
+            self.apc_enriched(),
+            self.additional_costs_long().filter(F.col("cost_type") != "apc"))
+
+    def _deal_participants(self) -> DataFrame:
+        """T8: institutions in an opt-out file or on a TA-DEAL row (NOT the
+        APC-side rows; the reference sets the flag only at
+        :401,418,459,469)."""
+        return (
+            self._read_csv(self.paths.wiley_opt_out).select("institution")
+            .unionByName(self._read_csv(self.paths.springer_opt_out)
+                         .select("institution"))
+            .unionByName(self.ta_enriched()
+                         .filter(F.col("agreement")
+                                 .isin(*DEAL_AGREEMENTS.values()))
+                         .select("institution")))
+
     def institutional_manifest(self) -> DataFrame:
         """S6+T7+T8+T9: which (institution, cube_type) pairs exist, with
         priorities — the reference's institutional_cubes.csv
@@ -509,26 +541,13 @@ class OpenAPCPipeline:
             return (df.select("institution").distinct()
                     .withColumn("cube_type", F.lit(cube_type)))
 
-        # T7: apc_ac only where a non-'apc' cost row exists
-        ac = institutions_with_additional_costs(
-            self.apc_enriched(),
-            self.additional_costs_long().filter(F.col("cost_type") != "apc"))
-        # T8: deal only for participants — institutions in an opt-out file
-        # or on a TA-DEAL row (NOT the APC-side rows; the reference sets the
-        # flag only at :401,418,459,469)
-        participants = (
-            self._read_csv(self.paths.wiley_opt_out).select("institution")
-            .unionByName(self._read_csv(self.paths.springer_opt_out)
-                         .select("institution"))
-            .unionByName(self.ta_enriched()
-                         .filter(F.col("agreement")
-                                 .isin(*DEAL_AGREEMENTS.values()))
-                         .select("institution")))
+        # T7: apc_ac only where a non-'apc' cost row exists; T8: deal only
+        # for participants
         frames = [present(self.apc_enriched(), "apc"),
-                  present(ac, "apc_ac"),
+                  present(self._ac_institutions(), "apc_ac"),
                   present(self.bpc_enriched(), "bpc"),
                   present(self.ta_enriched(), "ta"),
-                  present(participants, "deal")]
+                  present(self._deal_participants(), "deal")]
 
         all_pairs = frames[0]
         for f in frames[1:]:

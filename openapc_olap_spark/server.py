@@ -30,9 +30,25 @@ error naming the exception type; its traceback goes to stderr with the
 request id, never to the client.
 
 A request's py4j proxies form reference cycles that pin its Catalyst plans in
-the JVM until Python runs a full collection, so every request ends with
-``gc.collect()``. ``serve`` freezes the set-up's objects first
+the JVM until Python runs a full collection, so every request that plans
+ends with ``gc.collect()``. ``serve`` freezes the set-up's objects first
 (``gc.freeze``), which keeps that collection under a millisecond.
+
+Answer cache. Every ``200`` answer (its encoded body and content type) is
+kept in an LRU owned by the ``SlicerApp``, keyed by the request path and
+its sorted first-value query parameters: the endpoint, cube, member
+dimension or fact id, ``cut``, ``drilldown``, ``order``, ``page``,
+``pagesize`` and ``format``, i.e. everything an answer depends on. The key
+is the URL, not the ``QuerySpec``: a spec leaves out the endpoint and the
+format, and the treemap site's repeats are byte-identical URLs. The sum of
+the stored bodies stays within ``ANSWER_CACHE_BYTES``; there is no TTL. A
+hit is looked up after the request takes its slot (so "server busy" still
+holds) and before its job group and deadline timer: it makes no py4j
+call, starts no thread and runs no Spark job. ``4xx``, ``500`` and ``503``
+answers are never stored. The cache lives and dies with the app, whose
+views ``serve`` registers once at set-up; a load written in place under a
+running server stays unsupported, as before. When ``serve`` can switch
+to a newly published cube version, that version joins the key.
 """
 
 from __future__ import annotations
@@ -46,9 +62,12 @@ import sys
 import threading
 import traceback
 import uuid
+from collections import OrderedDict
 from urllib.parse import parse_qs
 from wsgiref.simple_server import WSGIServer
 from wsgiref.simple_server import make_server as _make_server
+
+from pyspark.errors import AnalysisException
 
 from openapc_olap_spark.model import Cube
 from openapc_olap_spark.query import JSON_RECORD_LIMIT, QueryEngine, QuerySpec
@@ -59,11 +78,44 @@ INFO = {"api_version": 2, "authentication": "none",
 # Kept below the 120 s HTTP timeout of slicer clients (perfbench/run.py).
 REQUEST_DEADLINE_S = 60.0
 
+# Bound on the summed body bytes the answer cache holds.
+ANSWER_CACHE_BYTES = 64 * 2**20
+
 
 class HttpError(Exception):
     def __init__(self, status: str, message: str):
         super().__init__(message)
         self.status = status
+
+
+class AnswerCache:
+    """Thread-safe LRU of ``200`` answers, ``key -> (body, content_type)``,
+    whose bodies sum to at most ``ANSWER_CACHE_BYTES``."""
+
+    def __init__(self) -> None:
+        self._lock = threading.Lock()
+        self._answers: OrderedDict[tuple, tuple[bytes, str]] = OrderedDict()
+        self.bytes = 0
+
+    def get(self, key: tuple) -> tuple[bytes, str] | None:
+        with self._lock:
+            answer = self._answers.get(key)
+            if answer is not None:
+                self._answers.move_to_end(key)
+            return answer
+
+    def put(self, key: tuple, answer: tuple[bytes, str]) -> None:
+        if len(answer[0]) > ANSWER_CACHE_BYTES:
+            return
+        with self._lock:
+            old = self._answers.pop(key, None)
+            if old is not None:
+                self.bytes -= len(old[0])
+            self._answers[key] = answer
+            self.bytes += len(answer[0])
+            while self.bytes > ANSWER_CACHE_BYTES:
+                _, (body, _) = self._answers.popitem(last=False)
+                self.bytes -= len(body)
 
 
 class SlicerApp:
@@ -75,6 +127,7 @@ class SlicerApp:
         self._sc = engine.spark.sparkContext
         self._slots = threading.BoundedSemaphore(
             2 * self._sc.defaultParallelism)
+        self.answers = AnswerCache()
 
     # -- WSGI plumbing ------------------------------------------------------
 
@@ -82,9 +135,22 @@ class SlicerApp:
         rid = environ.get("HTTP_X_REQUEST_ID") or uuid.uuid4().hex
         if self._slots.acquire(blocking=False):
             try:
-                status, body, content_type = self._answer(environ, rid)
+                path = environ.get("PATH_INFO", "/")
+                params = {k: v[0] for k, v in
+                          parse_qs(environ.get("QUERY_STRING", "")).items()}
+                key = (path, tuple(sorted(params.items())))
+                cached = self.answers.get(key)
+                if cached is not None:
+                    status, (body, content_type) = "200 OK", cached
+                else:
+                    try:
+                        status, body, content_type = self._answer(
+                            path, params, rid)
+                    finally:
+                        gc.collect()
+                    if status == "200 OK":
+                        self.answers.put(key, (body, content_type))
             finally:
-                gc.collect()
                 self._slots.release()
         else:
             status, body, content_type = _error(
@@ -96,12 +162,10 @@ class SlicerApp:
         ])
         return [body]
 
-    def _answer(self, environ, rid: str) -> tuple[str, bytes, str]:
+    def _answer(self, path: str, params: dict,
+                rid: str) -> tuple[str, bytes, str]:
         """Route one request in its own Spark job group, cancelled when the
         request outlives ``REQUEST_DEADLINE_S``."""
-        path = environ.get("PATH_INFO", "/")
-        params = {k: v[0] for k, v in
-                  parse_qs(environ.get("QUERY_STRING", "")).items()}
         # thread-local under PySpark's pinned-thread mode
         self._sc.setJobGroup(rid, path)
         expired = threading.Event()
@@ -123,6 +187,11 @@ class SlicerApp:
             if expired.is_set():
                 return _error("503 Service Unavailable",
                               f"deadline exceeded ({REQUEST_DEADLINE_S:g} s)")
+            # a registered cube whose table the load never wrote
+            if (isinstance(e, AnalysisException)
+                    and e.getCondition() == "TABLE_OR_VIEW_NOT_FOUND"):
+                return _error("404 Not Found",
+                              f"cube has no loaded data: {path!r}")
             sys.stderr.write(f"request {rid} failed: {path}\n"
                              f"{traceback.format_exc()}")
             return _error("500 Internal Server Error",

@@ -3,6 +3,7 @@ derived-cube row counts + spot rows — halving E8, melt/explode E16/E17,
 prunes T7/T8, fail-fast E2)."""
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -319,6 +320,27 @@ def test_t10_institutions_by_cube_type(pipeline):
     assert out["bpc"] == ["College Gamma", "TU Alpha"]
     assert out["ta"] == ["College Gamma", "TU Alpha", "Uni Beta"]
     assert out["deal"] == ["TU Alpha", "Uni Beta"]
+
+
+def test_write_finishes_after_uncollected_t10(spark, openapc_fixture_dir,
+                                              tmp_path):
+    """Building the T10 report registers no check that only its own
+    collect would fire, so a later write() does not wait forever."""
+    p = OpenAPCPipeline(spark, InputPaths.under(openapc_fixture_dir))
+    p.institutions_by_cube_type()           # built, never collected
+    failure = []
+
+    def write():
+        try:
+            p.write(str(tmp_path / "out"))
+        except Exception as e:              # reported by the assert below
+            failure.append(e)
+
+    t = threading.Thread(target=write, daemon=True)
+    t.start()
+    t.join(timeout=180)
+    assert not t.is_alive(), "write() blocked after an uncollected T10"
+    assert not failure, failure
 
 
 def test_t11_additional_cost_institutions(pipeline):

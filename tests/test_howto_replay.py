@@ -74,16 +74,23 @@ def app(spark):
     return SlicerApp(QueryEngine(spark, reg))
 
 
-def call(app, path, query=""):
+def raw_call(app, path, query="", request_id=None):
     captured = {}
 
     def start_response(status, headers):
         captured["status"] = status
         captured["headers"] = dict(headers)
 
-    body = b"".join(app({"PATH_INFO": path, "QUERY_STRING": query},
-                        start_response))
-    return captured["status"], json.loads(body) if body else None
+    environ = {"PATH_INFO": path, "QUERY_STRING": query}
+    if request_id is not None:
+        environ["HTTP_X_REQUEST_ID"] = request_id
+    body = b"".join(app(environ, start_response))
+    return captured["status"], captured["headers"]["Content-Type"], body
+
+
+def call(app, path, query=""):
+    status, _, body = raw_call(app, path, query)
+    return status, json.loads(body) if body else None
 
 
 def test_howto_1_cubes_list(app):
@@ -262,3 +269,44 @@ def test_howto_paged_envelope_parity(app):
         assert env["total_cell_count"] == whole["total_cell_count"] == 3
         cells += env["cells"]
     assert cells == whole["cells"]
+
+
+# One URL per worked HOWTO query (1-14) plus the aggregate CSV export.
+HOWTO_URLS = [
+    ("/cubes", ""),
+    ("/cube/bielefeld_u/facts", ""),
+    ("/cube/bielefeld_u/facts", "pagesize=4&page=0"),
+    ("/cube/bielefeld_u/facts", "pagesize=4&page=1"),
+    ("/cube/bielefeld_u/aggregate", ""),
+    ("/cube/bielefeld_u/aggregate", "drilldown=publisher"),
+    ("/cube/bielefeld_u/aggregate",
+     "drilldown=publisher&order=apc_amount_sum"),
+    ("/cube/bielefeld_u/aggregate", "drilldown=publisher|journal_full_title"),
+    ("/cube/bielefeld_u/model", ""),
+    ("/cube/openapc/aggregate", "cut=institution:Bielefeld%20U"),
+    ("/cube/openapc/aggregate", "cut=period:2014~2016"),
+    ("/cube/openapc/aggregate", "drilldown=institution&cut=country:DEU"),
+    ("/cube/openapc/aggregate",
+     "drilldown=publisher|institution&cut=country:GBR|is_hybrid:TRUE"
+     "&order=apc_num_items&pagesize=2&page=1"),
+    ("/cube/doi_lookup/facts", "cut=doi:10.3389/fmicb.2020.589364"),
+    ("/cube/bielefeld_u/aggregate", "drilldown=publisher&format=csv"),
+]
+
+
+def test_howto_hits_equal_fresh_misses(app, spark):
+    """A repeated HOWTO URL is answered from the app's answer cache: the
+    bytes a fresh app computes for it, and no Spark job in the hit's
+    request group."""
+    tracker = spark.sparkContext.statusTracker()
+    fresh = SlicerApp(QueryEngine(spark, app.registry))
+    cached = SlicerApp(QueryEngine(spark, app.registry))
+    for i, (path, query) in enumerate(HOWTO_URLS):
+        expected = raw_call(fresh, path, query, f"howto-fresh-{i}")
+        assert expected[0] == "200 OK", (path, query)
+        miss = raw_call(cached, path, query, f"howto-miss-{i}")
+        hit = raw_call(cached, path, query, f"howto-hit-{i}")
+        assert miss == hit == expected, (path, query)
+        assert not tracker.getJobIdsForGroup(f"howto-hit-{i}"), (path, query)
+    # the misses ran their jobs in their own groups, so the check can fail
+    assert tracker.getJobIdsForGroup("howto-miss-5")

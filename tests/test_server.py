@@ -1,7 +1,12 @@
 """HTTP façade contract tests (HOWTO.md:31-104 behaviors), mostly via
 direct WSGI invocation of the same app object production would host; the
-concurrency tests go through the threaded server ``serve()`` builds."""
+concurrency tests go through the threaded server ``serve()`` builds.
 
+The module ``app`` keeps its answer cache across tests, so a test that must
+see Spark run (blocking, slots, proxies, concurrency) uses a ``fresh`` app
+over the same views."""
+
+import contextlib
 import gc
 import json
 import sys
@@ -19,7 +24,7 @@ from pyspark.sql import functions as F
 from openapc_olap_spark import server
 from openapc_olap_spark.model import Aggregate, Cube, CubeRegistry
 from openapc_olap_spark.query import QueryEngine
-from openapc_olap_spark.server import SlicerApp, make_server
+from openapc_olap_spark.server import AnswerCache, SlicerApp, make_server
 
 
 @pytest.fixture(scope="module")
@@ -54,10 +59,15 @@ def call(app, path, query="", request_id=None):
     return captured["status"], captured["headers"], body
 
 
-@pytest.fixture(scope="module")
-def live(app):
-    """The app behind the threaded server ``serve()`` runs, on an
-    ephemeral port; yields a GET function returning (status, body)."""
+def fresh(app):
+    """A new app over the same engine views, with an empty answer cache."""
+    return SlicerApp(QueryEngine(app.engine.spark, app.registry))
+
+
+@contextlib.contextmanager
+def served(app):
+    """``app`` behind the threaded server ``serve()`` runs, on an ephemeral
+    port; yields a GET function returning (status, content type, body)."""
     srv = make_server(app, "127.0.0.1", 0)     # port 0 = ephemeral
     port = srv.server_address[1]
     t = threading.Thread(target=srv.serve_forever, daemon=True)
@@ -71,11 +81,41 @@ def live(app):
         except urllib.error.HTTPError as e:
             return e.code, e.headers["Content-Type"], e.read()
 
-    yield get
-    srv.shutdown()
-    srv.server_close()
-    t.join(timeout=10)
+    try:
+        yield get
+    finally:
+        srv.shutdown()
+        srv.server_close()
+        t.join(timeout=10)
     assert not t.is_alive()
+
+
+@pytest.fixture(scope="module")
+def live(app):
+    with served(app) as get:
+        yield get
+
+
+def split(url):
+    path, _, query = url.partition("?")
+    return path, query
+
+
+def count_computed(monkeypatch, app):
+    """The paths of the requests ``app`` computes rather than finds in its
+    answer cache."""
+    computed, original = [], app._answer
+
+    def answer(path, params, rid):
+        computed.append(path)
+        return original(path, params, rid)
+
+    monkeypatch.setattr(app, "_answer", answer)
+    return computed
+
+
+def stored_bytes(cache):
+    return sum(len(body) for body, _ in cache._answers.values())
 
 
 def block_engine(monkeypatch, app, method):
@@ -256,10 +296,11 @@ def test_live_socket_replays_howto_urls(live):
     assert agg["summary"]["amount_sum"] == 700.0
 
 
-def test_blocked_request_does_not_block_others(app, live, monkeypatch):
+def test_blocked_request_does_not_block_others(app, monkeypatch):
     """A request stuck in the engine leaves the server answering others."""
+    app = fresh(app)
     entered, release = block_engine(monkeypatch, app, "aggregate_envelope")
-    with ThreadPoolExecutor(1) as pool:
+    with served(app) as live, ThreadPoolExecutor(1) as pool:
         slow = pool.submit(live, "/cube/srv/aggregate?drilldown=period")
         try:
             assert entered.acquire(timeout=30)
@@ -277,6 +318,7 @@ def test_full_server_answers_503_then_recovers(app, monkeypatch, spark):
     """With every slot held, one more request is refused at once with a
     503 JSON error; once the slots are free it is served."""
     slots = 2 * spark.sparkContext.defaultParallelism
+    app = fresh(app)
     entered, release = block_engine(monkeypatch, app, "facts")
     with ThreadPoolExecutor(slots) as pool:
         held = [pool.submit(call, app, "/cube/srv/facts")
@@ -295,30 +337,37 @@ def test_full_server_answers_503_then_recovers(app, monkeypatch, spark):
     assert status == "200 OK"
 
 
-def test_concurrent_answers_equal_sequential_ones(live):
+# One request of each shape the server answers, and a 400.
+PATHS = ["/cubes", "/info", "/cube/srv/model",
+         "/cube/srv/facts?cut=institution:Uni%20A",
+         "/cube/srv/facts?order=euro:desc&format=csv",
+         "/cube/srv/aggregate?drilldown=period&order=period",
+         "/cube/srv/aggregate?drilldown=institution|period"
+         "&order=amount_sum:desc&pagesize=2",
+         "/cube/srv/aggregate?cut=period:2020",
+         "/cube/srv/members/institution",
+         "/cube/srv/fact/3",
+         "/cube/srv/cell?cut=institution:Uni%20B",
+         "/cube/srv/facts?cut=nope:1"]
+
+
+def test_concurrent_answers_equal_sequential_ones(app):
     """8 threads sending a mix of requests get the bytes each request gets
-    when sent alone."""
-    paths = ["/cubes", "/info", "/cube/srv/model",
-             "/cube/srv/facts?cut=institution:Uni%20A",
-             "/cube/srv/facts?order=euro:desc&format=csv",
-             "/cube/srv/aggregate?drilldown=period&order=period",
-             "/cube/srv/aggregate?drilldown=institution|period"
-             "&order=amount_sum:desc&pagesize=2",
-             "/cube/srv/aggregate?cut=period:2020",
-             "/cube/srv/members/institution",
-             "/cube/srv/fact/3",
-             "/cube/srv/cell?cut=institution:Uni%20B",
-             "/cube/srv/facts?cut=nope:1"]
-    alone = {p: live(p) for p in paths}
+    when sent alone. Each concurrent request carries a distinct unused
+    parameter, so none is answered from the cache."""
+    with served(fresh(app)) as live:
+        alone = {p: live(p) for p in PATHS}
     assert alone["/cube/srv/facts?cut=nope:1"][0] == 400
+    tagged = [(p, f"{p}{'&' if '?' in p else '?'}rep={i}")
+              for i in range(3) for p in PATHS]
     switch = sys.getswitchinterval()
     sys.setswitchinterval(1e-5)
     try:
-        with ThreadPoolExecutor(8) as pool:
-            together = list(pool.map(live, paths * 3))
+        with served(fresh(app)) as live, ThreadPoolExecutor(8) as pool:
+            together = list(pool.map(live, [t for _, t in tagged]))
     finally:
         sys.setswitchinterval(switch)
-    assert together == [alone[p] for p in paths * 3]
+    assert together == [alone[p] for p, _ in tagged]
 
 
 class _FailingEngine(QueryEngine):
@@ -329,7 +378,7 @@ class _FailingEngine(QueryEngine):
 def test_unexpected_error_is_500_json(app, spark, capsys):
     """An exception the handlers do not map is a 500 JSON error naming its
     type, without a traceback; the traceback goes to stderr with the
-    request id."""
+    request id. A 500 is never stored."""
     failing = SlicerApp(_FailingEngine(spark, app.registry))
     status, headers, body = call(failing, "/cube/srv/aggregate",
                                  "drilldown=period", request_id="req-500")
@@ -340,12 +389,17 @@ def test_unexpected_error_is_500_json(app, spark, capsys):
     assert "Traceback" not in error and "exploded" not in error
     err = capsys.readouterr().err
     assert "req-500" in err and "RuntimeError: engine exploded" in err
+    # never stored: the same request is computed and fails again
+    assert call(failing, "/cube/srv/aggregate", "drilldown=period")[0] \
+        == status
+    assert not failing.answers._answers
     assert call(failing, "/cube/srv/model")[0] == "200 OK"
 
 
 def test_deadline_cancels_the_request_job_group(app, spark, monkeypatch):
     """A request past the deadline has its Spark job group cancelled and is
-    answered 503; no job of its group is left running."""
+    answered 503, which is never stored; no job of its group is left
+    running."""
     @F.udf("string")
     def slow_period(i):
         time.sleep(60)
@@ -368,13 +422,17 @@ def test_deadline_cancels_the_request_job_group(app, spark, monkeypatch):
     assert status == "503 Service Unavailable"
     assert headers["Content-Type"] == "application/json"
     assert "deadline exceeded" in json.loads(body)["error"]
+    # not stored: the same URL runs its jobs again and expires again
+    assert call(slow_app, "/cube/slow/aggregate", "drilldown=period",
+                request_id="req-slow-again")[0] == status
+    assert not slow_app.answers._answers
 
     tracker = spark.sparkContext.statusTracker()
-    jobs = tracker.getJobIdsForGroup("req-slow")
-    assert jobs
+    groups = ("req-slow", "req-slow-again")
+    assert all(tracker.getJobIdsForGroup(g) for g in groups)
 
     def running():
-        return [j for j in tracker.getJobIdsForGroup("req-slow")
+        return [j for g in groups for j in tracker.getJobIdsForGroup(g)
                 if (info := tracker.getJobInfo(j)) is not None
                 and info.status == "RUNNING"]
 
@@ -388,6 +446,7 @@ def test_request_releases_its_jvm_proxies(app):
     """A request leaves no py4j proxy in a reference cycle, so the JVM
     objects it used (plans, columns) are freed when it ends, not at
     Python's next full collection."""
+    app = fresh(app)
     call(app, "/cube/srv/aggregate", "drilldown=period")
     gc.collect()
     call(app, "/cube/srv/aggregate", "drilldown=period&order=amount_sum")
@@ -400,3 +459,125 @@ def test_request_releases_its_jvm_proxies(app):
         gc.set_debug(flags)
         gc.garbage.clear()
     assert leaked == 0
+
+
+def test_urls_differing_in_one_input_get_their_own_answers(app):
+    """format, page, pagesize, the endpoint and the member dimension are
+    each part of the cache key: hits and misses alike answer what a fresh
+    app answers for that URL."""
+    groups = [
+        ["/cube/srv/facts", "/cube/srv/facts?format=csv"],
+        ["/cube/srv/aggregate?drilldown=period&order=period&pagesize=1",
+         "/cube/srv/aggregate?drilldown=period&order=period&pagesize=2",
+         "/cube/srv/aggregate?drilldown=period&order=period&pagesize=1"
+         "&page=1"],
+        ["/cube/srv/aggregate?cut=institution:Uni%20B",
+         "/cube/srv/cell?cut=institution:Uni%20B",
+         "/cube/srv/facts?cut=institution:Uni%20B"],
+        ["/cube/srv/members/institution", "/cube/srv/members/period"],
+    ]
+    cached = fresh(app)
+    for urls in groups:
+        expected = [call(fresh(app), *split(u))[2] for u in urls]
+        assert len(set(expected)) == len(urls), urls
+        for _ in range(2):                      # misses, then hits
+            assert [call(cached, *split(u))[2] for u in urls] == expected
+
+
+@pytest.mark.parametrize("path,query,status", [
+    ("/cube/srv/facts", "cut=nope:1", "400 Bad Request"),
+    ("/cube/nope/facts", "", "404 Not Found"),
+    ("/cube/srv/fact/99", "", "404 Not Found"),
+    ("/nowhere", "", "404 Not Found"),
+])
+def test_client_errors_are_not_stored(app, monkeypatch, path, query, status):
+    app = fresh(app)
+    computed = count_computed(monkeypatch, app)
+    assert [call(app, path, query)[0] for _ in range(2)] == [status] * 2
+    assert computed == [path, path]
+    assert not app.answers._answers
+
+
+def test_answer_cache_evicts_least_recently_used(monkeypatch):
+    monkeypatch.setattr(server, "ANSWER_CACHE_BYTES", 10)
+    cache = AnswerCache()
+    for key in "abc":
+        cache.put(key, (b"x" * 4, "text/plain"))
+    assert cache.get("a") is None               # 12 bytes > 10: oldest out
+    assert cache.get("b")                       # b is now the most recent
+    cache.put("d", (b"y" * 4, "text/plain"))
+    assert cache.get("c") is None
+    assert cache.get("b") and cache.get("d")
+    cache.put("big", (b"z" * 11, "text/plain"))  # over the whole budget
+    assert cache.get("big") is None
+    assert cache.get("b") and cache.get("d")
+    cache.put("b", (b"w" * 2, "text/plain"))    # a replaced body is freed
+    assert cache.get("b") == (b"ww", "text/plain")
+    assert cache.bytes == stored_bytes(cache) == 6
+
+
+def test_small_budget_keeps_bytes_within_it(app, monkeypatch):
+    """Served through an app, the stored bodies always sum to the tracked
+    byte count, within the budget; an evicted URL is computed again."""
+    urls = PATHS[:-1]                           # the 200 answers
+    bodies = {u: call(fresh(app), *split(u))[2] for u in urls}
+    budget = 2 * max(len(b) for b in bodies.values())
+    assert sum(len(b) for b in bodies.values()) > budget
+    monkeypatch.setattr(server, "ANSWER_CACHE_BYTES", budget)
+    app = fresh(app)
+    computed = count_computed(monkeypatch, app)
+    for u in urls:
+        assert call(app, *split(u))[2] == bodies[u]
+        assert app.answers.bytes == stored_bytes(app.answers) <= budget
+    assert app.answers.get(("/cubes", ())) is None     # the oldest went
+    assert call(app, "/cubes")[2] == bodies["/cubes"]
+    assert computed == [split(u)[0] for u in urls] + ["/cubes"]
+
+
+def test_cache_under_contention(app, monkeypatch):
+    """8 threads send a mix that hits, misses and evicts: each gets the
+    bytes the request gets alone, and the byte count still equals the
+    stored bodies, within the budget."""
+    alone = {u: call(fresh(app), *split(u)) for u in PATHS}
+    budget = sum(len(a[2]) for a in alone.values()) // 2
+    monkeypatch.setattr(server, "ANSWER_CACHE_BYTES", budget)
+    cached = fresh(app)
+    computed = count_computed(monkeypatch, cached)
+    urls = PATHS * 4
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(8) as pool:
+            got = list(pool.map(lambda u: call(cached, *split(u)), urls,
+                                timeout=120))
+    finally:
+        sys.setswitchinterval(switch)
+    assert got == [alone[u] for u in urls]
+    assert len(PATHS) <= len(computed) < len(urls)   # some hits
+    assert cached.answers.bytes == stored_bytes(cached.answers) <= budget
+
+
+def test_cube_without_loaded_table_is_404_json(spark):
+    """A registered cube whose table the load never wrote (the reference's
+    springer_compact_coverage) stays listed, but its data requests answer a
+    404 JSON error instead of a 500."""
+    reg = CubeRegistry()
+    reg.register(Cube(
+        name="unloaded", table="srv_never_loaded", label="Unloaded",
+        dimensions=("period",), measures=("euro",),
+        aggregates=(Aggregate("amount_sum", "euro", "sum"),),
+        fact_id="fid"))
+    unloaded = SlicerApp(QueryEngine(spark, reg))
+    assert json.loads(call(unloaded, "/cubes")[2]) == [
+        {"name": "unloaded", "label": "Unloaded"}]
+    assert call(unloaded, "/cube/unloaded/model")[0] == "200 OK"
+    for path, query in [("/cube/unloaded/aggregate", ""),
+                        ("/cube/unloaded/aggregate", "drilldown=period"),
+                        ("/cube/unloaded/facts", ""),
+                        ("/cube/unloaded/members/period", ""),
+                        ("/cube/unloaded/fact/1", ""),
+                        ("/cube/unloaded/cell", "")]:
+        status, headers, body = call(unloaded, path, query)
+        assert status == "404 Not Found", (path, query)
+        assert headers["Content-Type"] == "application/json"
+        assert "no loaded data" in json.loads(body)["error"]
