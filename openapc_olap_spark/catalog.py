@@ -8,9 +8,11 @@ binds it to the Parquet cubes written by ``etl.openapc.OpenAPCPipeline``.
 
 Institutional cubes (``<slug>``, ``<slug>_apc_ac``, ... —
 assets_generator.py:678-702) are NOT separate tables here: each is a
-``where institution = ...`` slice of the shared partitioned cube table, so
-the slicer API surface is identical while storage stays one table per type
-with dynamic partition pruning doing the per-institution access.
+``where institution = ...`` slice of the shared cube table, so the slicer
+API surface is identical while storage stays one table per type. The table's
+few files are sorted by (institution, period), so the slice reaches the
+Parquet scan as a pushed data filter and min/max stats skip the row groups
+of other institutions.
 """
 
 from __future__ import annotations

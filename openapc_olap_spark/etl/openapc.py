@@ -14,9 +14,10 @@ Scale design notes (100 TB posture):
   tables), and ``write`` releases those frames on every exit path;
 - fail-fast "unknown institution" parity is an anti-join count, not a
   driver-side probe (reference aborts on KeyError, :487-492,521);
-- per-institution tables become ONE table per cube type partitioned by
-  institution (dynamic partition pruning replaces table-per-institution,
-  reference routing :678-702).
+- per-institution tables become ONE table per cube type, written as a few
+  files rebalanced by institution and sorted by (institution, period); an
+  institutional cube is a ``where institution = ...`` slice that Catalyst
+  pushes into the Parquet scan (reference routing :678-702).
 """
 
 from __future__ import annotations
@@ -217,6 +218,7 @@ class OpenAPCPipeline:
         self.spark = spark
         self.paths = paths
         self._cache: dict[str, DataFrame] = {}
+        self._cubes: dict[str, DataFrame] | None = None
         # (kind, source_name, Observation) triples registered by the
         # validation observes; drained by check_validations().
         self._pending_checks: list[tuple[str, str, Observation]] = []
@@ -491,15 +493,22 @@ class OpenAPCPipeline:
     # -- build + write ---------------------------------------------------------
 
     def build_all(self) -> dict[str, DataFrame]:
-        return {
-            "openapc": self.openapc_cube(),
-            "openapc_ac": self.openapc_ac_cube(),
-            "bpc": self.bpc_cube(),
-            "transformative_agreements": self.ta_cube(),
-            "combined": self.combined_cube(),
-            "deal": self.deal_cube(),
-            "doi_lookup": self.doi_lookup_cube(),
-        }
+        """The seven cube plans, built once per load and written by
+        ``write``: the ``openapc_ac`` and ``deal`` plans register checks
+        that only an action over that very plan fires, so a second build
+        would leave the first one's checks waiting in
+        ``check_validations``."""
+        if self._cubes is None:
+            self._cubes = {
+                "openapc": self.openapc_cube(),
+                "openapc_ac": self.openapc_ac_cube(),
+                "bpc": self.bpc_cube(),
+                "transformative_agreements": self.ta_cube(),
+                "combined": self.combined_cube(),
+                "deal": self.deal_cube(),
+                "doi_lookup": self.doi_lookup_cube(),
+            }
+        return self._cubes
 
     def _ac_institutions(self) -> DataFrame:
         """T7: institutions with an APC row whose DOI has a non-'apc' cost —
@@ -586,32 +595,22 @@ class OpenAPCPipeline:
         return df.withColumn("fid", F.xxhash64(F.concat_ws("\x1f", *cols)))
 
     def write(self, out_dir: str) -> None:
-        """Materialize cubes as Parquet. The per-institution tables of the
-        reference become partitionBy('institution') on the shared cubes —
-        partition pruning gives the same per-institution access pattern
-        without N×5 physical tables (SURVEY.md §4). The persisted frames are
+        """Materialize each cube as Parquet, plus the manifest CSV. Rows are
+        rebalanced by institution (AQE sizes the files: one per cube at
+        fixture and benchmark scale) and sorted by (institution, period)
+        inside each file, so an institutional slice or a period cut skips
+        row groups by their min/max stats. Trade-off: every scan opens few
+        files, but an institutional slice reads each row group whose
+        institution range covers it (the whole file while a cube is one row
+        group) instead of one directory of its own. The persisted frames are
         released when it returns or raises."""
         try:
             for name, df in self.build_all().items():
-                df = self.with_fact_id(df)
-                path = os.path.join(out_dir, name)
-                partitioned = "institution" in df.columns and name != "doi_lookup"
-                # cluster rows by (institution, period) inside each task so
-                # period cuts (the dominant slicer predicate) skip row groups
-                # via parquet min/max stats — free at write time,
-                # per-partition, no shuffle. Institution MUST lead when the
-                # write is partitioned: the dynamic-partition writer otherwise
-                # inserts its own (unstable) sort on the partition column,
-                # which would destroy the period clustering inside each
-                # institution's file.
-                keys = ([] if not partitioned else ["institution"]) \
-                    + (["period"] if "period" in df.columns else [])
-                if keys:
-                    df = df.sortWithinPartitions(*keys)
-                writer = df.write.mode("overwrite")
-                if partitioned:
-                    writer = writer.partitionBy("institution")
-                writer.parquet(path)
+                (self.with_fact_id(df)
+                 .hint("rebalance", "institution")
+                 .sortWithinPartitions("institution", "period")
+                 .write.mode("overwrite")
+                 .parquet(os.path.join(out_dir, name)))
             (self.institutional_manifest()
              .coalesce(1).write.mode("overwrite")
              .option("header", True)
@@ -624,6 +623,7 @@ class OpenAPCPipeline:
             for df in self._cache.values():
                 df.unpersist()
             self._cache.clear()
+            self._cubes = None
             # after a failed write some observed plans never ran, and
             # Observation.get would block on them
             self._pending_checks = []

@@ -98,9 +98,9 @@ class Cube:
     label: str | None = None
     # Optional SQL predicate restricting the cube to a slice of its table —
     # how the reference's per-institution tables (assets_generator.py:678-702)
-    # become partition-pruned views of ONE shared table (SURVEY.md §4): the
-    # predicate lands on the partition column, so Catalyst prunes to the
-    # institution's files and the physical layout stays N tables lighter.
+    # become filtered views of ONE shared table (SURVEY.md §4): Catalyst
+    # pushes the predicate into the table's scan, and the physical layout
+    # stays N tables lighter.
     where: str | None = None
 
     def aggregate_by_name(self, name: str) -> Aggregate | None:

@@ -1,7 +1,7 @@
 """End-to-end institutional round-trip over PARQUET storage (reference
 operational flow: assets_generator tables -> model -> olap_server serve):
 CLI ``load`` on the fixture CSVs, ``model`` emission, then the WSGI app
-served from the written partitioned cubes — exercising
+served from the written cube files — exercising
 register_cube_tables + manifest where-slices over real files rather than
 the in-memory fixtures the other suites use."""
 
@@ -45,14 +45,19 @@ def app(spark, cube_dir):
     return SlicerApp(QueryEngine(spark, registry)), registry
 
 
-def test_load_writes_partitioned_parquet(cube_dir):
+def test_load_writes_one_file_per_cube(spark, cube_dir):
+    """The CLI load writes each cube as (institution, period)-sorted files,
+    not one directory per institution (S5): one data file per cube on the
+    fixture."""
+    import glob
+
     for cube in ("openapc", "openapc_ac", "bpc", "transformative_agreements",
                  "combined", "deal", "doi_lookup"):
-        assert os.path.isdir(os.path.join(cube_dir, cube)), cube
-    # per-institution partitions on the shared cube (S5)
-    parts = [p for p in os.listdir(os.path.join(cube_dir, "openapc"))
-             if p.startswith("institution=")]
-    assert len(parts) >= 2
+        entries = os.listdir(os.path.join(cube_dir, cube))
+        data = [e for e in entries if e.endswith(".parquet")]
+        assert len(data) == 1, (cube, entries)
+    assert glob.glob(f"{cube_dir}/**/institution=*", recursive=True) == []
+    assert spark.read.parquet(os.path.join(cube_dir, "openapc")).count() == 8
     assert os.path.isdir(os.path.join(cube_dir, "institutional_cubes"))
 
 
@@ -95,14 +100,49 @@ def test_institutional_slice_serves_only_its_rows(app, spark):
     rows = json.loads(body)
     assert rows and all(r["institution"] == inst for r in rows)
 
-    # storage-level pruning: the slice must reach the scan as a partition
-    # filter over the partitioned parquet, not a post-scan filter
+    # the slice predicate reaches the plan's Parquet scan as a data filter,
+    # not a partition filter (the cube has no partition column); the filter
+    # it pushes into that scan is asserted in the next test
     from openapc_olap_spark.query import QuerySpec
     engine = QueryEngine(spark, registry)
     plan = engine.facts(QuerySpec(cube=name))._jdf.queryExecution() \
         .executedPlan().toString()
-    assert "PartitionFilters: [" in plan
+    assert "PartitionFilters: []" in plan
     assert f"institution = {inst}" in plan or "isnotnull(institution" in plan
+
+
+def test_institutional_slice_is_pushed_into_the_scan(app, spark):
+    """An institutional cube's slice reaches the Parquet scan as a pushed
+    data filter (row-group min/max skipping), and its /aggregate answer is
+    the static cube's answer under the same institution cut."""
+    import re
+
+    from openapc_olap_spark.query import QuerySpec
+
+    wsgi, registry = app
+    name = sorted(n for n in registry.names()
+                  if registry.get(n).where is not None
+                  and registry.get(n).table == "openapc")[0]
+    inst = registry.get(name).where.split("'")[1]
+    engine = QueryEngine(spark, registry)
+    plan = engine.facts(QuerySpec(cube=name))._jdf.queryExecution() \
+        .executedPlan().toString()
+    pushed = re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+    assert len(pushed) == 1, plan
+    assert f"EqualTo(institution,{inst})" in pushed[0], plan
+
+    query = "drilldown=period|publisher&order=period"
+    status, _, sliced = call(wsgi, f"/cube/{name}/aggregate", query)
+    assert status == "200 OK"
+    status, _, cut = call(wsgi, "/cube/openapc/aggregate",
+                          f"{query}&cut=institution:{inst}")
+    assert status == "200 OK"
+    sliced, cut = json.loads(sliced), json.loads(cut)
+    # the envelope echoes the request's cut; everything else is the same
+    assert sliced.pop("cell") == []
+    assert cut.pop("cell") == [f"institution:{inst}"]
+    assert sliced == cut
+    assert sliced["cells"]
 
 
 def test_doi_lookup_roundtrip(app):

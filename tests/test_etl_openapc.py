@@ -301,14 +301,22 @@ def test_manifest_apc_named_cost_column_is_not_additional(
     assert [i for i, t in pairs if t == "apc_ac"] == ["TU Alpha"]
 
 
-def test_write_partitioned(pipeline, tmp_path):
+CUBES = ("openapc", "openapc_ac", "bpc", "transformative_agreements",
+         "combined", "deal", "doi_lookup")
+
+
+def test_write_one_file_per_cube(pipeline, tmp_path):
+    """Each cube is a few (institution, period)-sorted files, not one
+    directory per institution: on the fixture, one data file per cube."""
+    import glob
+
     out = str(tmp_path / "cubes")
     pipeline.write(out)
-    assert os.path.isdir(os.path.join(out, "openapc"))
-    # partitioned by institution -> directory per institution value
-    parts = [p for p in os.listdir(os.path.join(out, "openapc"))
-             if p.startswith("institution=")]
-    assert len(parts) == 5
+    for cube in CUBES:
+        entries = os.listdir(os.path.join(out, cube))
+        data = [e for e in entries if e.endswith(".parquet")]
+        assert len(data) == 1, (cube, entries)
+    assert glob.glob(f"{out}/**/institution=*", recursive=True) == []
     df = pipeline.spark.read.parquet(os.path.join(out, "openapc"))
     assert df.count() == 8
 
@@ -322,25 +330,39 @@ def test_t10_institutions_by_cube_type(pipeline):
     assert out["deal"] == ["TU Alpha", "Uni Beta"]
 
 
-def test_write_finishes_after_uncollected_t10(spark, openapc_fixture_dir,
-                                              tmp_path):
-    """Building the T10 report registers no check that only its own
-    collect would fire, so a later write() does not wait forever."""
-    p = OpenAPCPipeline(spark, InputPaths.under(openapc_fixture_dir))
-    p.institutions_by_cube_type()           # built, never collected
+def assert_write_finishes(p, out, what):
+    """write() in a daemon thread must end within 180 s, without error."""
     failure = []
 
     def write():
         try:
-            p.write(str(tmp_path / "out"))
+            p.write(out)
         except Exception as e:              # reported by the assert below
             failure.append(e)
 
     t = threading.Thread(target=write, daemon=True)
     t.start()
     t.join(timeout=180)
-    assert not t.is_alive(), "write() blocked after an uncollected T10"
+    assert not t.is_alive(), f"write() blocked after {what}"
     assert not failure, failure
+
+
+def test_write_finishes_after_uncollected_t10(spark, openapc_fixture_dir,
+                                              tmp_path):
+    """Building the T10 report registers no check that only its own
+    collect would fire, so a later write() does not wait forever."""
+    p = OpenAPCPipeline(spark, InputPaths.under(openapc_fixture_dir))
+    p.institutions_by_cube_type()           # built, never collected
+    assert_write_finishes(p, str(tmp_path / "out"), "an uncollected T10")
+
+
+def test_write_finishes_after_build_all(spark, openapc_fixture_dir,
+                                        tmp_path):
+    """write() writes the plans build_all() returned, so the checks they
+    registered fire and a write() after build_all() does not wait forever."""
+    p = OpenAPCPipeline(spark, InputPaths.under(openapc_fixture_dir))
+    p.build_all()                           # built, never collected
+    assert_write_finishes(p, str(tmp_path / "out"), "build_all()")
 
 
 def test_t11_additional_cost_institutions(pipeline):
@@ -351,33 +373,40 @@ def test_t11_additional_cost_institutions(pipeline):
 
 def test_write_clusters_institution_period(pipeline, tmp_path):
     """SCALING.md write-locality promise, asserted on actual parquet
-    footers: partitioned cubes are written sortWithinPartitions
-    (institution, period), so inside every physical file the period column
-    is non-decreasing and consecutive row-group min/max stats are ordered —
-    period cuts then skip row groups. Institution leads the sort so the
-    dynamic-partition writer does not inject its own (unstable) sort."""
+    footers: every cube is written sortWithinPartitions(institution,
+    period), so inside every physical file the (institution, period) pairs
+    are non-decreasing and consecutive row groups' min/max stats are
+    ordered — institutional slices and period cuts then skip row groups."""
     import glob
 
     import pyarrow.parquet as pq
 
+    def key(v):                             # Spark sorts NULLs first
+        return (v is not None, v)
+
     out = str(tmp_path / "sorted_out")
     pipeline.write(out)
     checked = 0
-    for path in glob.glob(f"{out}/*/institution=*/*.parquet"):
+    for path in glob.glob(f"{out}/*/*.parquet"):
         pf = pq.ParquetFile(path)
         names = pf.schema_arrow.names
-        if "period" not in names:
-            continue
+        inst, period = names.index("institution"), names.index("period")
         md = pf.metadata
-        col = names.index("period")
-        prev_max = None
+        prev = None
         for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(col).statistics
-            assert st is not None and st.has_min_max, path
-            if prev_max is not None:
-                assert st.min >= prev_max, path   # ordered row groups
-            prev_max = st.max
-        vals = pf.read(columns=["period"]).column("period").to_pylist()
-        assert vals == sorted(vals), path         # clustered inside file
+            si = md.row_group(rg).column(inst).statistics
+            sp = md.row_group(rg).column(period).statistics
+            assert si is not None and si.has_min_max, path
+            assert sp is not None and sp.has_min_max, path
+            if prev is not None:
+                assert si.min >= prev[0].max, path     # ordered row groups
+                if si.min == si.max == prev[0].min == prev[0].max:
+                    assert sp.min >= prev[1].max, path
+            prev = (si, sp)
+        t = pf.read(columns=["institution", "period"])
+        pairs = [(key(i), key(p)) for i, p in zip(
+            t.column("institution").to_pylist(),
+            t.column("period").to_pylist())]
+        assert pairs == sorted(pairs), path   # clustered inside file
         checked += 1
-    assert checked > 0
+    assert checked == 7
